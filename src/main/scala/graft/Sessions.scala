@@ -52,6 +52,11 @@ object Sessions {
       // recompilation every time. Measured on the 33-query bench sweep:
       // 2.4x total wall-time (338 s -> 139 s) from this one setting.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // local files through a filesystem that sets permissions and
+      // reads link status via java.nio instead of forking chmod /
+      // readlink per call (see LocalFiles.scala); checksums stay
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -15,23 +13,11 @@ import scala.concurrent.duration.Duration
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // clustering queries checkpoint per iteration; clean the files
-      // when their RDDs are collected (Sessions.get sets this too)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // 126 distinct plans overflow the default 100-entry Janino LRU —
-      // see Sessions.scala for the measured thrash
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    // the configuration tests and the benchmark run — the oracle gate
+    // grades what ships
+    val spark = Sessions.get(cpus)
     new java.io.File(outDir).mkdirs()
 
     // GRAFT_VERIFY_ONLY=name1,name2 restricts the dump to a subset —

@@ -88,8 +88,7 @@ private[operators] object IndexManifest {
     * reaches every segment's row groups).
     */
   def segTable(spark: SparkSession, h: Handle, table: String): org.apache.spark.sql.DataFrame =
-    cachedRel(h, s"flat/$table")(
-      spark.read.parquet(h.segments.map(s => s"$s/$table"): _*))
+    cachedRel(h, s"flat/$table")(readDirs(spark, h.segments.map(s => s"$s/$table")))
 
   /** [[Handle]]-memoized [[segTableOrd]]. */
   def segTableOrd(spark: SparkSession, h: Handle, table: String): org.apache.spark.sql.DataFrame =
@@ -106,8 +105,7 @@ private[operators] object IndexManifest {
     * tables (the delete-time mass each generation removed).
     */
   def tsStats(spark: SparkSession, h: Handle): org.apache.spark.sql.DataFrame =
-    cachedRel(h, "tsstats")(
-      spark.read.parquet(h.tombstones.map(t => s"$t/tsstats"): _*))
+    cachedRel(h, "tsstats")(readDirs(spark, h.tombstones.map(t => s"$t/tsstats")))
 
   /** Generic [[Handle]]-memoized relation for tier-specific assembled
     * reads (e.g. the PQ tier's masked vector union) — same contract as
@@ -123,7 +121,9 @@ private[operators] object IndexManifest {
     * segments + tombstones) on EVERY invocation — fixed, corpus-size-
     * independent overhead, but real per-call latency for an online
     * serve path. The cache collapses that to ONE parquet read on first
-    * touch and a pure filesystem METADATA listing afterwards: entries
+    * touch (none when this JVM wrote the manifest — [[write]] caches
+    * the generation it publishes) and a pure filesystem METADATA
+    * listing afterwards: entries
     * are keyed by the path's qualified URI and fingerprinted by the
     * manifest directory's file listing (name+length+mtime). Every
     * republish rewrites the manifest with fresh part-file UUIDs, so
@@ -133,7 +133,8 @@ private[operators] object IndexManifest {
     * [[handleCacheCap]] entries (access-ordered eviction), so a
     * years-long scheduler JVM touching dated index roots daily cannot
     * accrue entries forever — an evicted path simply pays the
-    * one-parquet-read reload on its next touch.
+    * one-parquet-read reload on its next touch. The directory-read
+    * memo ([[readDirs]]) is bounded by the same cap.
     */
   private[operators] var handleCacheCap = 256
 
@@ -152,38 +153,53 @@ private[operators] object IndexManifest {
   // ordered, and immune to clock adjustments
   private val cacheTick = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private final class CacheEntry(val fp: String, val h: Handle) {
-    val hits = new java.util.concurrent.atomic.AtomicLong(0L)
-    val lastUsed = new java.util.concurrent.atomic.AtomicLong(cacheTick.incrementAndGet())
-  }
-
-  /** Lock-free on the hot path: handle() lookups hit a
-    * ConcurrentHashMap (a synchronized access-ordered LinkedHashMap
-    * would put one JVM-global mutex on every serve entry of every
-    * index family). LRU bookkeeping is a per-entry recency stamp set
-    * on hit; eviction is amortized onto the rare INSERT path
-    * ([[evictIfOver]]), where a linear scan over ≤ cap entries is
-    * noise next to the manifest parquet read that preceded it.
+  /** A fingerprint-validated, LRU-bounded cache — the one shape both
+    * the [[handle]] cache and the [[readDirs]] memo take. Lock-free on
+    * the hot path: lookups hit a ConcurrentHashMap (a synchronized
+    * access-ordered LinkedHashMap would put one JVM-global mutex on
+    * every serve entry of every index family). LRU bookkeeping is a
+    * per-entry recency stamp set on hit; eviction is amortized onto
+    * the rare INSERT path, where a linear scan over <= cap entries is
+    * noise next to the parquet read that preceded it. An entry whose
+    * fingerprint no longer matches the one on disk is a miss.
     */
-  private val handleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CacheEntry]()
+  private final class FpCache[V] {
+    final class Entry(val fp: String, val v: V) {
+      val hits = new java.util.concurrent.atomic.AtomicLong(0L)
+      val lastUsed = new java.util.concurrent.atomic.AtomicLong(cacheTick.incrementAndGet())
+    }
+    private val m = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
-  private def evictIfOver(): Unit =
-    while (handleCache.size() > handleCacheCap) {
-      var oldestKey: String = null
-      var oldest = Long.MaxValue
-      handleCache.forEach { (k: String, e: CacheEntry) =>
-        val lu = e.lastUsed.get()
-        if (lu < oldest) { oldest = lu; oldestKey = k }
+    def get(key: String, fp: String): Option[Entry] =
+      Option(m.get(key)).filter(_.fp == fp).map { e =>
+        e.lastUsed.set(cacheTick.incrementAndGet()); e
       }
-      // concurrent inserts may race two evictors over the same scan;
-      // the worst case is evicting one entry more than strictly needed
-      // — it reloads on next touch
-      if (oldestKey == null) return
-      handleCache.remove(oldestKey): Unit
+
+    def put(key: String, fp: String, v: V): Unit = {
+      m.put(key, new Entry(fp, v))
+      while (m.size() > handleCacheCap) {
+        var oldestKey: String = null
+        var oldest = Long.MaxValue
+        m.forEach { (k: String, e: Entry) =>
+          val lu = e.lastUsed.get()
+          if (lu < oldest) { oldest = lu; oldestKey = k }
+        }
+        // concurrent inserts may race two evictors over the same scan;
+        // the worst case is evicting one entry more than strictly
+        // needed — it reloads on next touch
+        if (oldestKey == null) return
+        m.remove(oldestKey): Unit
+      }
     }
 
-  private[operators] def handleCacheSize: Int = handleCache.size()
+    def remove(key: String): Unit = m.remove(key): Unit
+    def clear(): Unit = m.clear()
+    def size: Int = m.size()
+  }
+
+  private val handleCache = new FpCache[Handle]
+
+  private[operators] def handleCacheSize: Int = handleCache.size
 
   /** Test hook: drop every cached handle. Safe at any time — an
     * evicted entry just reloads on next touch — but only tests have a
@@ -191,6 +207,137 @@ private[operators] object IndexManifest {
     * suites cached in the shared JVM).
     */
   private[operators] def handleCacheClear(): Unit = handleCache.clear()
+
+  /** Memoized reads of published index directories, one level under
+    * the [[Handle]] memo. Segment, tombstone, `stats` and `tsstats`
+    * directories never change once a manifest lists them, yet every
+    * new generation is a new Handle with an empty memo, and a
+    * schema-less `spark.read.parquet` runs a schema-inference job — so
+    * without this each maintenance step re-reads (one job per
+    * directory) what the step before it read. Same rules as the handle
+    * cache: keyed per (session, qualified directories), valid while
+    * the recursive listing fingerprint (name:length:mtime) of every
+    * directory is unchanged — a directory deleted and rewritten in
+    * place gets fresh part-file UUIDs, so the replay of a half-written
+    * batch root never sees a stale read — and LRU-bounded by
+    * [[handleCacheCap]]. A directory that does not exist is read
+    * through, never cached, so a missing path fails exactly as the
+    * plain read does.
+    */
+  private val dirMemo = new FpCache[AnyRef]
+
+  private def dirFingerprint(spark: SparkSession, dirs: Seq[String]): Option[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val perDir = dirs.map { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(conf)
+      def walk(q: org.apache.hadoop.fs.Path, rel: String): Seq[String] =
+        fs.listStatus(q).toSeq.flatMap { st =>
+          val n = rel + st.getPath.getName
+          if (st.isDirectory) walk(st.getPath, n + "/")
+          else Seq(s"$n:${st.getLen}:${st.getModificationTime}")
+        }
+      try Some(walk(p, "").sorted.mkString("\n"))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
+    if (perDir.contains(None)) None else Some(perDir.flatten.mkString("\n\n"))
+  }
+
+  private def memoDirs[T <: AnyRef](spark: SparkSession, kind: String, dirs: Seq[String])(
+      mk: => T): T =
+    dirFingerprint(spark, dirs) match {
+      case None => mk
+      case Some(fp) =>
+        val key = s"${sid(spark)}|$kind|${dirs.map(qualifiedPath(spark, _)).mkString("|")}"
+        dirMemo.get(key, fp) match {
+          case Some(e) => e.v.asInstanceOf[T]
+          case None =>
+            val v = mk
+            dirMemo.put(key, fp, v)
+            v
+        }
+    }
+
+  /** `spark.read.parquet(dirs: _*)`, memoized per directory
+    * fingerprint (see [[dirMemo]]). Every read of an index directory in
+    * the three families goes through here.
+    */
+  def readDirs(spark: SparkSession, dirs: Seq[String]): org.apache.spark.sql.DataFrame =
+    memoDirs(spark, "read", dirs)(spark.read.parquet(dirs: _*))
+
+  def readDir(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    readDirs(spark, Seq(dir))
+
+  /** Per-column sums over the small one-row metadata tables at `dirs`
+    * (`stats`, `tsstats`) — nulls skipped, and no rows sums to 0, as
+    * `coalesce(sum(c), 0)` does. A compaction-policy poll asks no
+    * query: each directory's rows are read on the driver
+    * ([[smallTableRows]]) and memoized like [[readDirs]], so a poll
+    * costs listings, and a first touch a footer-sized file read.
+    */
+  def sumOneRowTables(
+      spark: SparkSession, dirs: Seq[String], cols: Seq[String]): Seq[Long] = {
+    val rows = dirs.flatMap(d => memoDirs(spark, "rows", Seq(d))(smallTableRows(spark, d)))
+    cols.map(c => rows.flatMap(_.get(c)).sum)
+  }
+
+  /** The integer-valued cells of a small flat parquet table, one map
+    * per row (a null cell is absent from its map), read with
+    * parquet-hadoop on the driver: no schema-inference job and no scan
+    * job for what is one row. A directory that is missing or holds no
+    * data file goes through the Spark read instead, so it fails (or
+    * reads empty) exactly as a query over it would.
+    */
+  private def smallTableRows(spark: SparkSession, dir: String): Seq[Map[String, Long]] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(conf)
+    // Spark's data-file rule: hidden (`.`) and metadata (`_`) names are not data
+    val files = if (!fs.exists(p)) Seq.empty else fs.listStatus(p).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith(".") &&
+        !st.getPath.getName.startsWith("_"))
+    if (files.isEmpty)
+      readDir(spark, dir).collect().toSeq.map(r => r.schema.fieldNames.zip(r.toSeq).collect {
+        case (n, v: java.lang.Long) => n -> v.longValue
+        case (n, v: java.lang.Integer) => n -> v.longValue
+      }.toMap)
+    else files.flatMap { st =>
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport, st.getPath)
+        .withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        val t = g.getType
+        (0 until t.getFieldCount)
+          .filter(i => t.getType(i).isPrimitive && g.getFieldRepetitionCount(i) > 0)
+          .flatMap { i =>
+            t.getType(i).asPrimitiveType.getPrimitiveTypeName match {
+              case INT64 => Some(t.getFieldName(i) -> g.getLong(i, 0))
+              case INT32 => Some(t.getFieldName(i) -> g.getInteger(i, 0).toLong)
+              case _ => None
+            }
+          }.toMap
+      }.toList
+      finally reader.close()
+    }
+  }
+
+  /** A one-row LOCAL DataFrame of non-null Int / Long / String values
+    * — the shape of every family's info surface. Local, so polling it
+    * (`head()`) plans no aggregate and launches no job.
+    */
+  def infoRow(spark: SparkSession, cols: (String, Any)*): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(cols.map { case (n, v) =>
+      StructField(n, v match {
+        case _: Int => IntegerType
+        case _: Long => LongType
+        case _: String => StringType
+      }, nullable = false)
+    })
+    spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq(cols.map(_._2))), schema)
+  }
 
   private def manifestDir(
       spark: SparkSession, path: String): (org.apache.hadoop.fs.FileSystem,
@@ -205,14 +352,8 @@ private[operators] object IndexManifest {
     * every commit under a fresh part-file UUID, so two generations can
     * never collide.
     */
-  private def fingerprint(
-      spark: SparkSession, path: String): Option[String] = {
-    val (fs, p) = manifestDir(spark, path)
-    if (!fs.exists(p)) None
-    else Some(fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("\n"))
-  }
+  private def fingerprint(spark: SparkSession, path: String): Option[String] =
+    dirFingerprint(spark, Seq(s"$path/manifest"))
 
   private def qualifiedPath(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -245,21 +386,19 @@ private[operators] object IndexManifest {
       s"requirement failed: no complete $what index at $path: manifest missing " +
         "(build interrupted or never run)"))
     val key = cacheKey(spark, path)
-    val cached = handleCache.get(key)
-    if (cached != null && cached.fp == fp) {
-      cached.lastUsed.set(cacheTick.incrementAndGet())
+    handleCache.get(key, fp).map { cached =>
       // periodic carried-root re-validation (see [[RevalidateEvery]]);
       // a tripped check drops the entry so every subsequent call pays
       // the reload path and refuses immediately
       if (cached.hits.incrementAndGet() % RevalidateEvery == 0L) {
-        try validateRoots(spark, path, what, cached.h)
+        try validateRoots(spark, path, what, cached.v)
         catch {
           case e: IllegalArgumentException =>
             handleCache.remove(key); throw e
         }
       }
-      cached.h
-    } else {
+      cached.v
+    }.getOrElse {
       val row = spark.read.parquet(s"$path/manifest").head()
       def seqCol(name: String): Seq[String] =
         if (!row.schema.fieldNames.contains(name)) Seq.empty
@@ -273,8 +412,7 @@ private[operators] object IndexManifest {
         segments = seqCol("segments").map(resolve(path, _)),
         tombstones = seqCol("tombstones").map(resolve(path, _)))
       validateRoots(spark, path, what, h)
-      handleCache.put(key, new CacheEntry(fp, h))
-      evictIfOver()
+      handleCache.put(key, fp, h)
       h
     }
   }
@@ -319,7 +457,18 @@ private[operators] object IndexManifest {
         typedLit(segments).as("segments"),
         typedLit(tombstones).as("tombstones"))
       .write.mode("overwrite").parquet(s"$path/manifest")
-    invalidate(spark, path)
+    // cache the generation just written instead of paying the next
+    // handle() a parquet read of it — but only when it would load:
+    // a manifest whose roots do not (yet) exist keeps the invalidate,
+    // so the next handle() refuses (or accepts) exactly as a reload does
+    val h = Handle(version, flavor,
+      segments.map(resolve(path, _)), tombstones.map(resolve(path, _)))
+    val fp = fingerprint(spark, path)
+    val loadable = fp.isDefined &&
+      (try { validateRoots(spark, path, "segmented", h); true }
+      catch { case _: IllegalArgumentException => false })
+    if (loadable) handleCache.put(cacheKey(spark, path), fp.get, h)
+    else invalidate(spark, path)
   }
 
   /** The manifest's segment list resolved to full paths: relative
@@ -372,7 +521,7 @@ private[operators] object IndexManifest {
       spark: SparkSession, tsPaths: Seq[String], idCol: String): Option[
         org.apache.spark.sql.DataFrame] =
     if (tsPaths.isEmpty) None
-    else Some(spark.read.parquet(tsPaths.map(t => s"$t/ids"): _*)
+    else Some(readDirs(spark, tsPaths.map(t => s"$t/ids"))
       .groupBy(col(idCol)).agg(max("up_to").as("__ts_up")))
 
   /** One per-segment table read with each row's segment ordinal
@@ -401,7 +550,7 @@ private[operators] object IndexManifest {
       spark: SparkSession, segs: Seq[String], table: String): org.apache.spark.sql.DataFrame = {
     val optional = optionalSegColumns.getOrElse(table, Seq.empty)
     segs.zipWithIndex.map { case (s, i) =>
-      val df = spark.read.parquet(s"$s/$table").withColumn("__seg", lit(i))
+      val df = readDir(spark, s"$s/$table").withColumn("__seg", lit(i))
       optional.foldLeft(df) { case (d, (c, t)) =>
         if (d.columns.contains(c)) d else d.withColumn(c, lit(null).cast(t))
       }
@@ -617,9 +766,30 @@ private[operators] object IndexManifest {
     */
   private[graft] var onFenceCommit: String => Unit = _ => ()
 
+  /** Commits on one pointer from threads of ONE JVM are serialized
+    * from the fence read through the marker GC. The exclusive create
+    * alone cannot order them once superseded markers are reclaimed: a
+    * racer stalled between its fence read and its create would
+    * re-create a marker that later commits already consumed and
+    * deleted — two winners for one epoch. Across processes the fence
+    * stays what it is documented to be (see [[readEpoch]]). Reentrant,
+    * so a commit nested in the same thread (the test seams) runs.
+    */
+  private val fenceLocks = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.locks.ReentrantLock]()
+
   private[operators] def checkAndBumpEpoch(
       spark: SparkSession, pointerPath: String, entryEpoch: Long, who: String): Unit = {
     onFenceCheck(pointerPath)
+    val lock = fenceLocks.computeIfAbsent(qualifiedPath(spark, pointerPath),
+      _ => new java.util.concurrent.locks.ReentrantLock())
+    lock.lock()
+    try bumpEpochLocked(spark, pointerPath, entryEpoch, who)
+    finally lock.unlock()
+  }
+
+  private def bumpEpochLocked(
+      spark: SparkSession, pointerPath: String, entryEpoch: Long, who: String): Unit = {
     val cur = readEpoch(spark, pointerPath)
     require(cur == entryEpoch,
       s"$who lost the pointer fence at $pointerPath: epoch moved $entryEpoch -> $cur — " +
@@ -1171,11 +1341,13 @@ private[operators] object IndexManifest {
     * duplicate ids (no version column orders them; last-write-wins
     * under Spark's unordered batches would be a nondeterministic lie
     * — collapse versions upstream, e.g. through a `latest_per_key`
-    * step). `who` names the entry point in the error.
+    * step). `who` names the entry point in the error. Returns the
+    * batch's row count, which the caller hands to [[ingestRound]] so
+    * the round does not count the batch a second time.
     */
   private[operators] def requireUpsertBatch(
       batch: org.apache.spark.sql.DataFrame, batchId: Long,
-      idCol: String, payloadCol: Option[String], who: String): Unit = {
+      idCol: String, payloadCol: Option[String], who: String): Long = {
     val aggs = Seq(
       count(lit(1)).as("n"),
       count(when(col(idCol).isNull, 1)).as("n_null_id"),
@@ -1197,6 +1369,7 @@ private[operators] object IndexManifest {
       s"$who: batch $batchId carries ${n - nIds} duplicate '$idCol' rows — no version " +
         "column orders them, so last-write-wins would be nondeterministic; collapse " +
         "versions upstream first")
+    n
   }
 
   /** ONE streaming micro-batch's ingest round, shared by every index
@@ -1223,7 +1396,9 @@ private[operators] object IndexManifest {
     *    auto-deleted by a retrying stream.
     *  - FRESH: run the round.
     *
-    * An EMPTY batch publishes nothing. With `keepGenerations` set,
+    * An EMPTY batch publishes nothing; `rowCount`, when the caller
+    * already counted `rows` ([[requireUpsertBatch]]), answers the
+    * emptiness check without another job. With `keepGenerations` set,
     * every round ends with [[retainGenerations]], so a long-running
     * ingest's disk footprint is bounded by the compaction cadence,
     * not the batch count.
@@ -1296,7 +1471,8 @@ private[operators] object IndexManifest {
       maintain: (org.apache.spark.sql.DataFrame, String, String) => String,
       keepGenerations: Option[Int],
       snapshotPath: Option[String] = None,
-      nightlyMarkerPath: Option[String] = None): Unit = {
+      nightlyMarkerPath: Option[String] = None,
+      rowCount: Option[Long] = None): Unit = {
     val outRoot = s"$ingestRoot/batch-$batchId"
     val rootP = new org.apache.hadoop.fs.Path(outRoot)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1442,7 +1618,7 @@ private[operators] object IndexManifest {
               "auto-delete it. Restore the generation (or republish the pointer " +
               "onto a valid one) before resuming the ingest")
         }
-        if (!rows.isEmpty) {
+        if (rowCount.fold(!rows.isEmpty)(_ > 0L)) {
           if (fs.exists(rootP))
             require(fs.delete(rootP, true),
               s"ingestRound: failed to clear half-written residue at $outRoot")

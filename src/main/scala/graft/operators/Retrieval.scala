@@ -229,7 +229,15 @@ object Retrieval {
     * sort keeps pruning locally.
     */
   private def segTable(spark: SparkSession, segs: Seq[String], table: String): DataFrame =
-    spark.read.parquet(segs.map(s => s"$s/$table"): _*)
+    IndexManifest.readDirs(spark, segs.map(s => s"$s/$table"))
+
+  /** The id column name is whatever the build used — read it off ONE
+    * segment's doclen schema (doclen is (id, dl, content_hash), and
+    * segments share the build schema).
+    */
+  private def docIdCol(spark: SparkSession, segs: Seq[String]): String =
+    IndexManifest.readDir(spark, s"${segs.head}/doclen")
+      .columns.filter(c => c != "dl" && c != "content_hash").head
 
   // The sequenced tombstone-mask machinery (the LSM rule that lets a
   // deleted doc re-enter via updateIndex) lives in [[IndexManifest]],
@@ -269,8 +277,7 @@ object Retrieval {
   def liveDocIds(spark: SparkSession, indexPath: String): DataFrame = {
     val h = IndexManifest.handle(spark, indexPath, "BM25")
     IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val idCol = spark.read.parquet(s"${h.segments.head}/doclen")
-      .columns.filter(c => c != "dl" && c != "content_hash").head
+    val idCol = docIdCol(spark, h.segments)
     IndexManifest.memo(spark, h, s"live-doc-ids/$idCol") {
       IndexManifest.maskLive(
         IndexManifest.segTableOrd(spark, h, "doclen"),
@@ -291,8 +298,7 @@ object Retrieval {
   def liveDocHashes(spark: SparkSession, indexPath: String): DataFrame = {
     val h = IndexManifest.handle(spark, indexPath, "BM25")
     IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val idCol = spark.read.parquet(s"${h.segments.head}/doclen")
-      .columns.filter(c => c != "dl" && c != "content_hash").head
+    val idCol = docIdCol(spark, h.segments)
     IndexManifest.memo(spark, h, s"live-doc-hashes/$idCol") {
       // the shared (memoized) segment union is STRICT on schema, but
       // doclen's content_hash is the one sanctioned evolution column
@@ -469,9 +475,7 @@ object Retrieval {
     val (segs, tsPaths) = (h.segments, h.tombstones)
     val seg = "segments/seg-00000"
     clearManifest(spark, outPath)
-    // the id column name is whatever the build used — read it off the
-    // doclen schema (doclen is (id, dl, content_hash))
-    val idCol = segTable(spark, segs, "doclen").columns.filter(c => c != "dl" && c != "content_hash").head
+    val idCol = docIdCol(spark, segs)
     val tsRel = tombstoneRel(spark, tsPaths, idCol)
     // the masked relations feed TWO writes each (postings -> postings +
     // termdf recompute; doclen -> stats + doclen) — persist them so the
@@ -526,27 +530,18 @@ object Retrieval {
     val h = IndexManifest.handle(spark, indexPath, "BM25")
     IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
     val (segs, tsPaths) = (h.segments, h.tombstones)
-    // coalesce: a listed segment whose stats parquet exists but is
-    // EMPTY (partial write predating the crash-consistency manifest,
-    // or external truncation) must degrade this metadata surface to
-    // zeros, not surface a null that NPEs the scheduler probe in
-    // [[needsCompaction]].
-    val total = IndexManifest.segTable(spark, h, "stats")
-      .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs_indexed"),
-        coalesce(sum("total_len"), lit(0L)).as("len_indexed"))
-    val masked =
-      if (tsPaths.isEmpty)
-        spark.range(1).select(lit(0L).as("n_docs_masked"), lit(0L).as("len_masked"))
-      else IndexManifest.tsStats(spark, h)
-        .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs_masked"),
-          coalesce(sum("total_len"), lit(0L)).as("len_masked"))
-    total.crossJoin(broadcast(masked)).select(
-      lit(segs.size).as("n_segments"),
-      lit(tsPaths.size).as("n_tombstone_gens"),
-      col("n_docs_indexed"),
-      col("n_docs_masked"),
-      (col("n_docs_indexed") - col("n_docs_masked")).as("n_docs_live"),
-      (col("len_indexed") - col("len_masked")).as("total_len_live"))
+    // a listed segment whose stats parquet exists but is EMPTY
+    // (partial write predating the crash-consistency manifest, or
+    // external truncation) sums to zero: this metadata surface must
+    // degrade, not surface a null that NPEs [[needsCompaction]]
+    val Seq(nIndexed, lenIndexed) = IndexManifest.sumOneRowTables(
+      spark, segs.map(s => s"$s/stats"), Seq("n_docs", "total_len"))
+    val Seq(nMasked, lenMasked) = IndexManifest.sumOneRowTables(
+      spark, tsPaths.map(t => s"$t/tsstats"), Seq("n_docs", "total_len"))
+    IndexManifest.infoRow(spark,
+      "n_segments" -> segs.size, "n_tombstone_gens" -> tsPaths.size,
+      "n_docs_indexed" -> nIndexed, "n_docs_masked" -> nMasked,
+      "n_docs_live" -> (nIndexed - nMasked), "total_len_live" -> (lenIndexed - lenMasked))
   }
 
   /** The compaction-policy trigger: true when the segment list has
@@ -726,7 +721,7 @@ object Retrieval {
     // changes (and before any filtering could hide a malformed row
     // from the checks) — shared verbatim with the vector/side upserts
     // so the three families' refusal contracts cannot drift
-    IndexManifest.requireUpsertBatch(batch, batchId, idCol, Some(textCol),
+    val n = IndexManifest.requireUpsertBatch(batch, batchId, idCol, Some(textCol),
       "ingestUpsertBatch")
     IndexManifest.ingestRound(spark, batch,
       batchId, pointerPath, ingestRoot, "BM25",
@@ -743,7 +738,7 @@ object Retrieval {
             idCol, textCol, outRoot, maxSegments, maxMaskedRatio)
         } finally replaced.unpersist()
       },
-      keepGenerations, snapshotPath, nightlyMarkerPath)
+      keepGenerations, snapshotPath, nightlyMarkerPath, Some(n))
   }
 
   /** Format version 3 = segmented layout (manifest carries the
@@ -1066,8 +1061,7 @@ object Retrieval {
     require(terms.nonEmpty, "queryConstants: empty query")
     val h = IndexManifest.handle(spark, indexPath, "BM25")
     IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val idCol = spark.read.parquet(s"${h.segments.head}/doclen")
-      .columns.filter(c => c != "dl" && c != "content_hash").head
+    val idCol = docIdCol(spark, h.segments)
     val (dfs, stats) = liveTermStats(spark, h, terms.distinct, idCol)
     val dfMap = dfs.collect().map(r => r.getString(0) -> r.getLong(1))
       .filter(_._2 > 0L).toMap

@@ -83,7 +83,7 @@ object SideIndex {
   private def writeSegmentRaw(rows: DataFrame, segPath: String): Unit = {
     val spark = rows.sparkSession
     rows.write.mode("overwrite").parquet(s"$segPath/rows")
-    spark.read.parquet(s"$segPath/rows")
+    IndexManifest.readDir(spark, s"$segPath/rows")
       .agg(count(lit(1)).as("n_rows"))
       .write.mode("overwrite").parquet(s"$segPath/stats")
   }
@@ -138,7 +138,7 @@ object SideIndex {
     // catalogString, not DataType equality: parquet reads arrays back
     // with containsNull = true while a memory-built increment may say
     // false — nullability variance unions fine and must not refuse
-    val baseSchema = spark.read.parquet(s"${h.segments.head}/rows").schema
+    val baseSchema = IndexManifest.readDir(spark, s"${h.segments.head}/rows").schema
     val incSchema = increment.schema
     require(
       baseSchema.map(f => (f.name, f.dataType.catalogString)).toSet ==
@@ -229,7 +229,8 @@ object SideIndex {
     // tombstones exist, and their ids table names exactly one column
     val idCol =
       if (h.tombstones.isEmpty) null
-      else spark.read.parquet(s"${h.tombstones.head}/ids").columns.filter(_ != "up_to").head
+      else IndexManifest.readDir(spark, s"${h.tombstones.head}/ids")
+        .columns.filter(_ != "up_to").head
     val live =
       if (idCol == null) IndexManifest.segTableOrd(spark, h, "rows").drop("__seg")
       else IndexManifest.maskLive(
@@ -364,7 +365,7 @@ object SideIndex {
       keepGenerations: Option[Int] = None,
       snapshotPath: Option[String] = None,
       nightlyMarkerPath: Option[String] = None): Unit = {
-    IndexManifest.requireUpsertBatch(batch, batchId, idCol, None,
+    val n = IndexManifest.requireUpsertBatch(batch, batchId, idCol, None,
       "SideIndex.ingestUpsertBatch")
     IndexManifest.ingestRound(spark, batch,
       batchId, pointerPath, ingestRoot, s"side($flavor)",
@@ -382,7 +383,7 @@ object SideIndex {
             maxSegments, maxMaskedRatio)
         } finally replaced.unpersist()
       },
-      keepGenerations, snapshotPath, nightlyMarkerPath)
+      keepGenerations, snapshotPath, nightlyMarkerPath, Some(n))
   }
 
   /** The operational metadata row (n_segments, n_tombstone_gens,
@@ -391,17 +392,13 @@ object SideIndex {
     */
   def info(spark: SparkSession, path: String, flavor: String): DataFrame = {
     val h = handleFor(spark, path, flavor)
-    val total = IndexManifest.segTable(spark, h, "stats")
-      .agg(coalesce(sum("n_rows"), lit(0L)).as("n_rows_indexed"))
-    val masked =
-      if (h.tombstones.isEmpty) spark.range(1).select(lit(0L).as("n_rows_masked"))
-      else IndexManifest.tsStats(spark, h)
-        .agg(coalesce(sum("n_rows"), lit(0L)).as("n_rows_masked"))
-    total.crossJoin(broadcast(masked)).select(
-      lit(h.segments.size).as("n_segments"),
-      lit(h.tombstones.size).as("n_tombstone_gens"),
-      col("n_rows_indexed"),
-      col("n_rows_masked"),
-      (col("n_rows_indexed") - col("n_rows_masked")).as("n_rows_live"))
+    val Seq(nIndexed) = IndexManifest.sumOneRowTables(
+      spark, h.segments.map(s => s"$s/stats"), Seq("n_rows"))
+    val Seq(nMasked) = IndexManifest.sumOneRowTables(
+      spark, h.tombstones.map(t => s"$t/tsstats"), Seq("n_rows"))
+    IndexManifest.infoRow(spark,
+      "n_segments" -> h.segments.size, "n_tombstone_gens" -> h.tombstones.size,
+      "n_rows_indexed" -> nIndexed, "n_rows_masked" -> nMasked,
+      "n_rows_live" -> (nIndexed - nMasked))
   }
 }

@@ -652,7 +652,7 @@ object Similarity {
     * no vector bytes.
     */
   private def writeSegStats(spark: SparkSession, segPath: String): Unit =
-    spark.read.parquet(s"$segPath/vectors")
+    IndexManifest.readDir(spark, s"$segPath/vectors")
       .agg(count(lit(1)).as("n_vecs"))
       .write.mode("overwrite").parquet(s"$segPath/stats")
 
@@ -727,7 +727,7 @@ object Similarity {
     IndexManifest.memo(spark, h, "vectors-live") {
       IndexManifest.tombstoneRel(spark, h, "neighbor_id") match {
         case None =>
-          segs.map(s => spark.read.parquet(s"$s/vectors")).reduce(_.unionByName(_))
+          segs.map(s => IndexManifest.readDir(spark, s"$s/vectors")).reduce(_.unionByName(_))
         case some =>
           // the sequencing rule is IndexManifest's — shared verbatim with
           // the BM25 tier, one implementation of the invariant
@@ -931,19 +931,14 @@ object Similarity {
     val h = IndexManifest.handle(spark, indexPath, "IVF-PQ")
     IndexManifest.requireVersion(h, indexPath, "IVF-PQ", PqFormatVersion)
     val (segs, tsPaths, flavor) = (h.segments, h.tombstones, h.flavor)
-    val total = IndexManifest.segTable(spark, h, "stats")
-      .agg(coalesce(sum("n_vecs"), lit(0L)).as("n_vecs_indexed"))
-    val masked =
-      if (tsPaths.isEmpty) spark.range(1).select(lit(0L).as("n_vecs_masked"))
-      else IndexManifest.tsStats(spark, h)
-        .agg(coalesce(sum("n_vecs"), lit(0L)).as("n_vecs_masked"))
-    total.crossJoin(broadcast(masked)).select(
-      lit(segs.size).as("n_segments"),
-      lit(tsPaths.size).as("n_tombstone_gens"),
-      lit(flavor).as("flavor"),
-      col("n_vecs_indexed"),
-      col("n_vecs_masked"),
-      (col("n_vecs_indexed") - col("n_vecs_masked")).as("n_vecs_live"))
+    val Seq(nIndexed) = IndexManifest.sumOneRowTables(
+      spark, segs.map(s => s"$s/stats"), Seq("n_vecs"))
+    val Seq(nMasked) = IndexManifest.sumOneRowTables(
+      spark, tsPaths.map(t => s"$t/tsstats"), Seq("n_vecs"))
+    IndexManifest.infoRow(spark,
+      "n_segments" -> segs.size, "n_tombstone_gens" -> tsPaths.size, "flavor" -> flavor,
+      "n_vecs_indexed" -> nIndexed, "n_vecs_masked" -> nMasked,
+      "n_vecs_live" -> (nIndexed - nMasked))
   }
 
   /** The compaction-policy trigger for the IVF-PQ tier, mirroring
@@ -1082,7 +1077,7 @@ object Similarity {
       keepGenerations: Option[Int] = None,
       snapshotPath: Option[String] = None,
       nightlyMarkerPath: Option[String] = None): Unit = {
-    IndexManifest.requireUpsertBatch(batch, batchId, idCol, Some(vecCol),
+    val n = IndexManifest.requireUpsertBatch(batch, batchId, idCol, Some(vecCol),
       "ingestPqUpsertBatch")
     IndexManifest.ingestRound(spark, batch,
       batchId, pointerPath, ingestRoot, "IVF-PQ",
@@ -1100,7 +1095,7 @@ object Similarity {
             coarseCents, codebooks, outRoot, residual, maxSegments, maxMaskedRatio)
         } finally replaced.unpersist()
       },
-      keepGenerations, snapshotPath, nightlyMarkerPath)
+      keepGenerations, snapshotPath, nightlyMarkerPath, Some(n))
   }
 
   /** The canonical per-vector payload fingerprint under an index's

@@ -123,4 +123,49 @@ class IndexHandleSpec extends SparkTestBase {
     assert(e.getMessage.contains("no longer exists") &&
       e.getMessage.contains("compactIndex"), e.getMessage)
   }
+
+  test("a handle cached on write equals the one reloaded from disk") {
+    val dir = tmp("handle-onwrite")
+    val base = tmp("handle-onwrite-base")
+    Seq(s"$dir/segments/seg-00000", s"$dir/tombstones/ts-00000", s"$base/seg").foreach(d =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
+    IndexManifest.write(spark, dir, version = 3, flavor = "pq-direct",
+      segments = Seq(s"$base/seg", "segments/seg-00000"),
+      tombstones = Seq("tombstones/ts-00000"))
+    val (cached, jobs) = graft.JobCounter.jobsDuring(spark)(IndexManifest.handle(spark, dir))
+    assert(jobs == 0, s"handle() right after write read the manifest back ($jobs jobs)")
+    IndexManifest.handleCacheClear()
+    val (reloaded, reloadJobs) =
+      graft.JobCounter.jobsDuring(spark)(IndexManifest.handle(spark, dir))
+    assert(reloadJobs > 0, "the cleared cache must reload from disk")
+    assert(cached == reloaded)
+  }
+
+  test("a manifest whose roots do not exist yet is not cached on write") {
+    val dir = tmp("handle-onwrite-missing")
+    IndexManifest.write(spark, dir, version = 3, segments = Seq("segments/seg-00000"))
+    // the roots appear after the write: the first handle() must load
+    // (and validate) from disk, not serve anything cached by write
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/segments/seg-00000"))
+    val (h, jobs) = graft.JobCounter.jobsDuring(spark)(IndexManifest.handle(spark, dir))
+    assert(jobs > 0, "a write whose roots did not exist must not have cached its handle")
+    assert(h.segments == Seq(s"$dir/segments/seg-00000"))
+  }
+
+  test("a memoized directory read is not served after the directory is rewritten in place") {
+    val dir = s"${tmp("dirmemo")}/stats"
+    spark.range(3).selectExpr("id as a").write.parquet(dir)
+    assert(IndexManifest.readDir(spark, dir).columns.toSeq == Seq("a"))
+    assert(graft.JobCounter.jobs(spark)(IndexManifest.readDir(spark, dir).columns) == 0,
+      "a re-read of an unchanged directory must come from the memo")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    spark.range(5).selectExpr("id * 10 as b").write.parquet(dir)
+    val again = IndexManifest.readDir(spark, dir)
+    assert(again.columns.toSeq == Seq("b"))
+    assert(again.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 10L, 20L, 30L, 40L))
+    // a directory that is gone fails as the plain read does, and is
+    // never cached as absent
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    intercept[org.apache.spark.sql.AnalysisException](IndexManifest.readDir(spark, dir))
+  }
 }
