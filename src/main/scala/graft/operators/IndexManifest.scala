@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** The commit-marker protocol shared by every on-disk index this
   * library publishes (the BM25 postings set in [[Retrieval]], the
-  * IVF-PQ vector index in [[Similarity]]): a one-row parquet table
-  * written strictly AFTER every data table of a build. Its presence
-  * certifies the tables under `path` are a consistent set from one
-  * build; builders delete it FIRST, so a crash mid-(re)build leaves an
-  * index that loudly refuses to serve instead of serving
+  * IVF-PQ vector index in [[Similarity]], the [[SideIndex]] tables,
+  * all maintained by the one [[SegmentedIndex]] lifecycle): a one-row
+  * parquet table written strictly AFTER every data table of a build.
+  * Its presence certifies the tables under `path` are a consistent set
+  * from one build; builders delete it FIRST, so a crash mid-(re)build
+  * leaves an index that loudly refuses to serve instead of serving
   * mixed-generation results.
   *
   * Segmented layout: the manifest additionally RECORDS the list of
@@ -439,8 +440,8 @@ private[operators] object IndexManifest {
 
   /** `flavor` names the encode variant when an index family has more
     * than one (e.g. direct vs residual PQ codes) — it is part of the
-    * index identity, so maintenance paths validate it via
-    * [[requireFlavor]] instead of trusting caller discipline.
+    * index identity, so every [[SegmentedIndex.open]] that names a
+    * flavor validates it instead of trusting caller discipline.
     * `segments` lists the directories (relative to `path`, or
     * absolute) whose tables a reader must union — order is the append
     * order, oldest first. `tombstones` lists delete-marker directories
@@ -480,13 +481,6 @@ private[operators] object IndexManifest {
   def segmentPaths(spark: SparkSession, path: String): Seq[String] =
     handle(spark, path).segments
 
-  /** The manifest's tombstone-directory list, resolved like
-    * [[segmentPaths]]. Reads the column defensively: a manifest
-    * written before deletes existed simply has none.
-    */
-  def tombstonePaths(spark: SparkSession, path: String): Seq[String] =
-    handle(spark, path).tombstones
-
   def resolve(root: String, entry: String): String =
     if (new org.apache.hadoop.fs.Path(entry).isAbsolute) entry else s"$root/$entry"
 
@@ -524,13 +518,6 @@ private[operators] object IndexManifest {
     else Some(readDirs(spark, tsPaths.map(t => s"$t/ids"))
       .groupBy(col(idCol)).agg(max("up_to").as("__ts_up")))
 
-  /** One per-segment table read with each row's segment ordinal
-    * (`__seg`) riding along — the shape [[maskLive]] needs. Per-path
-    * reads keep multi-root partitioned directories legal (a single
-    * multi-path scan would infer one partition spec across roots and
-    * refuse), and filter pushdown still reaches every per-segment scan
-    * (Catalyst pushes through Project-of-literal and Union).
-    */
   /** The columns a segment generation may LEGITIMATELY lack, per
     * table — the sanctioned format-evolution cases, padded explicitly
     * as typed nulls before a STRICT union. Everything else refuses:
@@ -546,6 +533,13 @@ private[operators] object IndexManifest {
       : Map[String, Seq[(String, org.apache.spark.sql.types.DataType)]] =
     Map("doclen" -> Seq("content_hash" -> org.apache.spark.sql.types.LongType))
 
+  /** One per-segment table read with each row's segment ordinal
+    * (`__seg`) riding along — the shape [[maskLive]] needs. Per-path
+    * reads keep multi-root partitioned directories legal (a single
+    * multi-path scan would infer one partition spec across roots and
+    * refuse), and filter pushdown still reaches every per-segment scan
+    * (Catalyst pushes through Project-of-literal and Union).
+    */
   def segTableOrd(
       spark: SparkSession, segs: Seq[String], table: String): org.apache.spark.sql.DataFrame = {
     val optional = optionalSegColumns.getOrElse(table, Seq.empty)
@@ -595,24 +589,6 @@ private[operators] object IndexManifest {
     invalidate(spark, path)
   }
 
-  /** Fails loudly when no complete index sits at `path`, or when the
-    * index on disk predates the table set the caller needs
-    * (`minVersion`): a maintenance path that reads a table an older
-    * build never wrote must say "rebuild", not die mid-update with an
-    * opaque missing-parquet error. `what` names the index flavor in
-    * the error (e.g. "BM25", "IVF-PQ").
-    */
-  def requirePresent(
-      spark: SparkSession, path: String, what: String, minVersion: Int = 1): Unit =
-    requireVersion(handle(spark, path, what), path, what, minVersion)
-
-  /** The [[requirePresent]] version check on an ALREADY-loaded handle —
-    * so a caller that needs presence + version + segments + tombstones
-    * + flavor resolves the handle ONCE (one fingerprint listing per
-    * call, one parquet read per generation) instead of once per
-    * helper. On object stores every extra resolution is a listing
-    * round trip, on the surfaces this cache exists to make cheap.
-    */
   /** Refuses a maintenance-round output root that overlaps the index
     * being maintained or ANY generation it carries by reference. The
     * failure this blocks: a scheduler loop that reuses one outRoot
@@ -639,6 +615,15 @@ private[operators] object IndexManifest {
     }
   }
 
+  /** Fails loudly when the index on disk predates the table set the
+    * caller needs (`minVersion`): a path that reads a table an older
+    * build never wrote must say "rebuild", not die mid-update with an
+    * opaque missing-parquet error. `what` names the index family in
+    * the error (e.g. "BM25", "IVF-PQ"). Checked on an ALREADY-loaded
+    * handle, so a caller that needs presence + version + segments +
+    * tombstones + flavor resolves the handle ONCE (one fingerprint
+    * listing per call, one parquet read per generation).
+    */
   def requireVersion(h: Handle, path: String, what: String, minVersion: Int): Unit =
     if (minVersion > 1) {
       require(h.version >= minVersion,
@@ -701,18 +686,18 @@ private[operators] object IndexManifest {
       .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong).toOption)
   }
 
-  /** The pointer's current fencing epoch — 0 before any lifecycle
-    * operation ever committed. Monotonic: every committed publish /
-    * rollback / vacuum / retention round bumps it by one. The value is
-    * the max of the counter file and the commit markers, so a crash
-    * between the marker create and the counter rewrite still counts.
-    */
   /** Paths whose epoch-floor file was seen with unparseable content —
     * the warn-once guard of [[readEpoch]]'s corruption diagnostic.
     */
   private val garbledFloorWarned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** The pointer's current fencing epoch — 0 before any lifecycle
+    * operation ever committed. Monotonic: every committed publish /
+    * rollback / vacuum / retention round bumps it by one. The value is
+    * the max of the counter file and the commit markers, so a crash
+    * between the marker create and the counter rewrite still counts.
+    */
   def readEpoch(spark: SparkSession, pointerPath: String): Long = {
     val p = new org.apache.hadoop.fs.Path(epochPath(pointerPath))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1149,34 +1134,6 @@ private[operators] object IndexManifest {
     spark.createDataFrame(rows).toDF("root", "n_files_deleted", "bytes_deleted")
   }
 
-  /** RETENTION-POLICY GC over the pointer's own generation history —
-    * the one-call form a scheduler actually runs nightly: keep the
-    * `keep` most recent superseded generations as a [[rollbackPointer]]
-    * window and [[vacuum]] older history entries, HOLDING (not
-    * refusing) any that something surviving still carries by
-    * reference — the normal LSM state between compactions, so
-    * retention composes with every maintain round, not just
-    * compaction nights. Reachability is transitive the way survival
-    * needs it to be: the served root and the kept window must stay
-    * valid indexes, so what THEY reference survives; a held
-    * generation must stay deletable-later-as-a-unit, so what IT
-    * references survives too (newest-first accumulation). Held
-    * entries stay in the history and fall out on a later round once a
-    * compaction re-homes the data that pinned them.
-    *
-    * Crash-safe: deletes go through [[vacuum]] (which re-validates
-    * every retired root against the surviving set — belt and
-    * suspenders) and the history file is rewritten only after they
-    * succeed; a crash between the two leaves retired roots listed but
-    * absent, which the next round reports as `absent` and drops —
-    * WHEREVER they land: an absent entry that `keep` was raised over
-    * since the crash (now inside the kept window) heals the same way
-    * instead of wedging the round on a missing-manifest load. Fenced
-    * like [[vacuum]]. Returns one row per history entry outside the
-    * window (plus one per healed absent entry anywhere):
-    * (root, status = vacuumed | held | absent, n_files_deleted,
-    * bytes_deleted).
-    */
   /** A maintain round mints its steps under ONE outRoot
     * (`outRoot/deleted|updated|compacted` — the only roots the
     * maintain entry points publish), and the pointer history records
@@ -1218,7 +1175,35 @@ private[operators] object IndexManifest {
     }
   }
 
-  /** `pinned` extends the surviving set with roots something OUTSIDE
+  /** RETENTION-POLICY GC over the pointer's own generation history —
+    * the one-call form a scheduler actually runs nightly: keep the
+    * `keep` most recent superseded generations as a [[rollbackPointer]]
+    * window and [[vacuum]] older history entries, HOLDING (not
+    * refusing) any that something surviving still carries by
+    * reference — the normal LSM state between compactions, so
+    * retention composes with every maintain round, not just
+    * compaction nights. Reachability is transitive the way survival
+    * needs it to be: the served root and the kept window must stay
+    * valid indexes, so what THEY reference survives; a held
+    * generation must stay deletable-later-as-a-unit, so what IT
+    * references survives too (newest-first accumulation). Held
+    * entries stay in the history and fall out on a later round once a
+    * compaction re-homes the data that pinned them.
+    *
+    * Crash-safe: deletes go through [[vacuum]] (which re-validates
+    * every retired root against the surviving set — belt and
+    * suspenders) and the history file is rewritten only after they
+    * succeed; a crash between the two leaves retired roots listed but
+    * absent, which the next round reports as `absent` and drops —
+    * WHEREVER they land: an absent entry that `keep` was raised over
+    * since the crash (now inside the kept window) heals the same way
+    * instead of wedging the round on a missing-manifest load. Fenced
+    * like [[vacuum]]. Returns one row per history entry outside the
+    * window (plus one per healed absent entry anywhere):
+    * (root, status = vacuumed | held | absent, n_files_deleted,
+    * bytes_deleted).
+    *
+    * `pinned` extends the surviving set with roots something OUTSIDE
     * this pointer's own lifecycle still serves — the [[Nightly]] use:
     * the deployment snapshot a pre-swap reader resolved can name a
     * root that intraday ingest pushed several generations deep in the
@@ -1330,8 +1315,8 @@ private[operators] object IndexManifest {
 
   // ==================== streaming ingest round ====================
 
-  /** The upsert-batch validation shared by every family's CDC ingest
-    * ([[Retrieval.ingestUpsertBatch]] and its vector/side siblings):
+  /** The upsert-batch validation of every family's CDC ingest
+    * ([[SegmentedIndex.ingestUpsert]]):
     * ONE bounded aggregate over the batch refuses — BEFORE any state
     * change or filtering that could hide a malformed row — null ids
     * (an upsert row must name what it replaces), null payloads when
@@ -1372,61 +1357,6 @@ private[operators] object IndexManifest {
     n
   }
 
-  /** ONE streaming micro-batch's ingest round, shared by every index
-    * family (the tier wrappers — [[Retrieval.ingestIndexBatch]],
-    * [[Similarity.ingestPqIndexBatch]], [[SideIndex.ingestBatch]] —
-    * supply only the filtered rows and the maintain closure): append
-    * the batch as an O(batch) increment generation on whatever the
-    * serve pointer currently publishes and flip the pointer.
-    * Idempotent under Structured Streaming's `foreachBatch` replay
-    * contract via the batchId-keyed root (`ingestRoot/batch-<id>`):
-    *
-    *  - COMMITTED (a manifest stands under the batch root): the crash
-    *    fell between commit and pointer flip — re-publish the pointer
-    *    and stop. A compaction that crashed after its update step
-    *    committed leaves uncommitted `compacted` residue beside a
-    *    valid `updated` chain: delete the residue (nothing references
-    *    an uncommitted root), serve the valid chain, and let the
-    *    policy re-evaluate next batch.
-    *  - HALF-WRITTEN (the batch root exists, no readable manifest —
-    *    absent OR torn mid-write): delete the residue wholesale and
-    *    re-run — manifest-last means nothing serves it. Exception: an
-    *    unreadable manifest under the root the pointer SERVES is
-    *    out-of-band corruption and refuses loudly instead of being
-    *    auto-deleted by a retrying stream.
-    *  - FRESH: run the round.
-    *
-    * An EMPTY batch publishes nothing; `rowCount`, when the caller
-    * already counted `rows` ([[requireUpsertBatch]]), answers the
-    * emptiness check without another job. With `keepGenerations` set,
-    * every round ends with [[retainGenerations]], so a long-running
-    * ingest's disk footprint is bounded by the compaction cadence,
-    * not the batch count.
-    */
-  /** `snapshotPath` names the deployment snapshot (if any) whose roots
-    * this round's retention must PIN: intraday batches push the root
-    * the nightly snapshot names several generations deep, where the
-    * keep window alone would reclaim it from under every snapshot
-    * reader hours before the next nightly republish. The whole
-    * snapshot's root set is pinned — other tiers' roots merely extend
-    * the reachable set harmlessly, and a torn/absent pinned root
-    * degrades instead of wedging (see retainGenerations).
-    *
-    * `nightlyMarkerPath` names the [[Nightly]] round marker (if the
-    * deployment runs a marker-protected nightly); the round ALSO
-    * discovers the marker path recorded beside the pointer by every
-    * marker-protected [[Nightly.run]] ([[readNightlyMarkerConfig]]),
-    * so the check holds even for call sites that never thread the
-    * parameter: a STANDING marker
-    * that names this pointer means a crashed swap left the deployment
-    * half-flipped, and the round REFUSES up front — intraday ingest
-    * chaining new generations on the mixed state would move the
-    * pointer off the marker's recorded base, after which
-    * [[Nightly.recover]] refuses to heal and the nightly wedges until
-    * an operator reconciles by hand. Refusing here keeps the heal
-    * automatic: run recover (or the next nightly, which heals at
-    * entry), then resume the stream.
-    */
   /** The chainbase record format this builder writes. v1 is one line:
     * `graft-chainbase-v1\t<qualified base root>`. A bare qualified
     * path with no stamp is the first (r18) format — semantically
@@ -1461,6 +1391,60 @@ private[operators] object IndexManifest {
         s"ingestRound: malformed chainbase record at $outRoot/chainbase: '$content'")
     }
 
+  /** ONE streaming micro-batch's ingest round, shared by every index
+    * family ([[SegmentedIndex.ingest]] and [[SegmentedIndex.ingestUpsert]]
+    * supply only the rows and the maintain closure): append
+    * the batch as an O(batch) increment generation on whatever the
+    * serve pointer currently publishes and flip the pointer.
+    * Idempotent under Structured Streaming's `foreachBatch` replay
+    * contract via the batchId-keyed root (`ingestRoot/batch-<id>`):
+    *
+    *  - COMMITTED (a manifest stands under the batch root): the crash
+    *    fell between commit and pointer flip — re-publish the pointer
+    *    and stop. A compaction that crashed after its update step
+    *    committed leaves uncommitted `compacted` residue beside a
+    *    valid `updated` chain: delete the residue (nothing references
+    *    an uncommitted root), serve the valid chain, and let the
+    *    policy re-evaluate next batch.
+    *  - HALF-WRITTEN (the batch root exists, no readable manifest —
+    *    absent OR torn mid-write): delete the residue wholesale and
+    *    re-run — manifest-last means nothing serves it. Exception: an
+    *    unreadable manifest under the root the pointer SERVES is
+    *    out-of-band corruption and refuses loudly instead of being
+    *    auto-deleted by a retrying stream.
+    *  - FRESH: run the round.
+    *
+    * An EMPTY batch publishes nothing; `rowCount`, when the caller
+    * already counted `rows` ([[requireUpsertBatch]]), answers the
+    * emptiness check without another job. With `keepGenerations` set,
+    * every round ends with [[retainGenerations]], so a long-running
+    * ingest's disk footprint is bounded by the compaction cadence,
+    * not the batch count.
+    *
+    * `snapshotPath` names the deployment snapshot (if any) whose roots
+    * this round's retention must PIN: intraday batches push the root
+    * the nightly snapshot names several generations deep, where the
+    * keep window alone would reclaim it from under every snapshot
+    * reader hours before the next nightly republish. The whole
+    * snapshot's root set is pinned — other tiers' roots merely extend
+    * the reachable set harmlessly, and a torn/absent pinned root
+    * degrades instead of wedging (see retainGenerations).
+    *
+    * `nightlyMarkerPath` names the [[Nightly]] round marker (if the
+    * deployment runs a marker-protected nightly); the round ALSO
+    * discovers the marker path recorded beside the pointer by every
+    * marker-protected [[Nightly.run]] ([[readNightlyMarkerConfig]]),
+    * so the check holds even for call sites that never thread the
+    * parameter: a STANDING marker
+    * that names this pointer means a crashed swap left the deployment
+    * half-flipped, and the round REFUSES up front — intraday ingest
+    * chaining new generations on the mixed state would move the
+    * pointer off the marker's recorded base, after which
+    * [[Nightly.recover]] refuses to heal and the nightly wedges until
+    * an operator reconciles by hand. Refusing here keeps the heal
+    * automatic: run recover (or the next nightly, which heals at
+    * entry), then resume the stream.
+    */
   private[operators] def ingestRound(
       spark: SparkSession,
       rows: org.apache.spark.sql.DataFrame,

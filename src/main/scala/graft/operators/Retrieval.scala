@@ -163,53 +163,8 @@ object Retrieval {
     * maintenance writes O(increment) bytes; [[compactIndex]] merges
     * the list back to one segment when it grows.
     */
-  def buildIndex(docs: DataFrame, idCol: String, textCol: String, path: String): Unit = {
-    // the tokenize + explode + hash aggregate is the build's whole cost;
-    // persist it so the postings write and the termdf derivation share
-    // ONE evaluation instead of re-scanning the corpus per output table
-    val index = invertedIndex(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      clearManifest(docs.sparkSession, path)
-      val seg = "segments/seg-00000"
-      writeSegment(docs, idCol, textCol, index, s"$path/$seg")
-      IndexManifest.write(docs.sparkSession, path, version = FormatVersion,
-        segments = Seq(seg))
-    } finally index.unpersist()
-  }
-
-  /** One segment's four tables under `segPath`, from the documents
-    * they index and their precomputed postings relation — the shared
-    * write shape of [[buildIndex]] (first segment = whole corpus) and
-    * [[updateIndex]] (new segment = the increment).
-    */
-  private def writeSegment(
-      docs: DataFrame, idCol: String, textCol: String,
-      postings: DataFrame, segPath: String): Unit = {
-    postings
-      .repartition(col("term"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$segPath/postings")
-    postings.groupBy("term").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$segPath/termdf")
-    // stats and doclen must come from the DOCS (zero-token docs have
-    // no posting but still count toward N) — one light sizes-only
-    // scan feeds both. doclen additionally records content_hash =
-    // [[contentHash]] of the raw text: the per-doc payload fingerprint
-    // [[liveDocHashes]] serves to the cross-tier content audit,
-    // written at index time so the audit never re-reads text (the
-    // index does not store text, so a post-hoc hash is impossible)
-    val dl = docs
-      .where(col(textCol).isNotNull)
-      .select(col(idCol), docLen(textCol).as("dl"),
-        contentHash(col(textCol)).as("content_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      dl.agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
-        .write.mode("overwrite").parquet(s"$segPath/stats")
-      dl.write.mode("overwrite").parquet(s"$segPath/doclen")
-    } finally dl.unpersist()
-  }
+  def buildIndex(docs: DataFrame, idCol: String, textCol: String, path: String): Unit =
+    SegmentedIndex.build(Bm25(idCol, textCol), docs, path)
 
   /** The canonical per-document payload fingerprint — xxhash64 of the
     * raw text, codegen'd. The ONE hash both sides of the content audit
@@ -222,15 +177,6 @@ object Retrieval {
     */
   def contentHash(text: Column): Column = xxhash64(text)
 
-  /** One index table unioned across every listed segment — the serve
-    * paths' read shape. Parquet takes the segment roots as a
-    * multi-path scan, so filter pushdown (the query-term In) reaches
-    * every segment's row groups and each segment's build-time term
-    * sort keeps pruning locally.
-    */
-  private def segTable(spark: SparkSession, segs: Seq[String], table: String): DataFrame =
-    IndexManifest.readDirs(spark, segs.map(s => s"$s/$table"))
-
   /** The id column name is whatever the build used — read it off ONE
     * segment's doclen schema (doclen is (id, dl, content_hash), and
     * segments share the build schema).
@@ -239,30 +185,94 @@ object Retrieval {
     IndexManifest.readDir(spark, s"${segs.head}/doclen")
       .columns.filter(c => c != "dl" && c != "content_hash").head
 
-  // The sequenced tombstone-mask machinery (the LSM rule that lets a
-  // deleted doc re-enter via updateIndex) lives in [[IndexManifest]],
-  // SHARED with the IVF-PQ tier — one implementation of the
-  // sequencing invariant, so the two index families cannot drift.
-  private def tombstoneRel(
-      spark: SparkSession, tsPaths: Seq[String], idCol: String): Option[DataFrame] =
-    IndexManifest.tombstoneRel(spark, tsPaths, idCol)
-
-  private def segTableOrd(spark: SparkSession, segs: Seq[String], table: String): DataFrame =
-    IndexManifest.segTableOrd(spark, segs, table)
-
-  private def maskLive(
-      rows: DataFrame, ts: Option[DataFrame], idCol: String): DataFrame =
-    IndexManifest.maskLive(rows, ts, idCol)
-
-  /** The currently-indexed-and-LIVE id set: the segment-unioned
-    * `doclen` ids minus tombstone-masked rows — what the maintenance
-    * guards must check membership against (doclen alone would refuse
-    * the delete-then-re-add document-update path).
+  /** The BM25 family of the shared [[SegmentedIndex]] lifecycle: a
+    * segment is the postings / termdf / stats / doclen tables of a
+    * document batch (see [[buildIndex]]), keyed by the build's doc id
+    * column; a delete records the deleted docs' (n_docs, total_len).
     */
-  private def liveIndexedIds(
-      spark: SparkSession, segs: Seq[String], tsPaths: Seq[String], idCol: String): DataFrame =
-    maskLive(segTableOrd(spark, segs, "doclen"),
-      tombstoneRel(spark, tsPaths, idCol), idCol).select(col(idCol))
+  private final case class Bm25(idCol: String = "", textCol: String = "")
+      extends SegmentedIndex.Family {
+    def what: String = "BM25"
+    def stem: String = "docs"
+    override def statCols: Seq[String] = Seq("n_docs", "total_len")
+    override def payloadCol: Option[String] = Some(textCol)
+
+    // stats and doclen come from the DOCS (zero-token docs have no
+    // posting but still count toward N). doclen additionally records
+    // content_hash = [[contentHash]] of the raw text: the per-doc
+    // payload fingerprint [[liveDocHashes]] serves to the cross-tier
+    // content audit, written at index time because the index does not
+    // store text
+    def writeSegment(docs: DataFrame, segPath: String): Unit =
+      writeTables(invertedIndex(docs, idCol, textCol), None,
+        docs.where(col(textCol).isNotNull).select(col(idCol), docLen(textCol).as("dl"),
+          contentHash(col(textCol)).as("content_hash")),
+        segPath, cache = true)
+
+    // nothing re-tokenizes: postings are a columnar copy re-sorted
+    // GLOBALLY by term, doclen concatenates. With deletes in play the
+    // per-segment termdf/stats over-count the tombstoned docs, so both
+    // recompute from the masked relations (cached: each feeds two
+    // writes); without deletes the cheap segment termdf sums are exact
+    def rehome(spark: SparkSession, h: IndexManifest.Handle, segPath: String): Unit = {
+      val id = docIdCol(spark, h.segments)
+      val ts = IndexManifest.tombstoneRel(spark, h, id)
+      def live(table: String): DataFrame =
+        IndexManifest.maskLive(IndexManifest.segTableOrd(spark, h, table), ts, id)
+      val termdf = if (ts.nonEmpty) None else Some(IndexManifest.segTable(spark, h, "termdf")
+        .groupBy("term").agg(sum("df").as("df")))
+      writeTables(live("postings"), termdf, live("doclen"), segPath, cache = ts.nonEmpty)
+    }
+
+    /** The live doclen ids — doclen, not postings, because it is the
+      * COMPLETE indexed id set: a zero-token doc has no posting, and a
+      * postings-derived guard would let it be indexed twice.
+      */
+    def liveIds(spark: SparkSession, h: IndexManifest.Handle): DataFrame =
+      IndexManifest.memo(spark, h, s"live-doc-ids/$idCol")(liveDoclen(spark, h).select(col(idCol)))
+
+    def incrementIds(increment: DataFrame): DataFrame =
+      broadcast(increment.where(col(textCol).isNotNull).select(col(idCol)).distinct())
+
+    // the deleted ids' rows of the LIVE doclen: earlier tombstones
+    // already masked their rows, so the generations' masses add
+    // without overlap across delete/re-add/delete cycles
+    override def tombstoneMass(
+        spark: SparkSession, h: IndexManifest.Handle, ids: DataFrame): DataFrame =
+      liveDoclen(spark, h).join(ids, Seq(idCol), "left_semi")
+        .agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
+
+    private def liveDoclen(spark: SparkSession, h: IndexManifest.Handle): DataFrame =
+      IndexManifest.maskLive(IndexManifest.segTableOrd(spark, h, "doclen"),
+        IndexManifest.tombstoneRel(spark, h, idCol), idCol)
+  }
+
+  /** One segment's four tables: `postings` repartitioned AND sorted by
+    * term (row-group min/max pruning), `termdf` (given, else counted
+    * from the postings), and the one-row `stats` plus `doclen` from the
+    * doc-length relation. `cache` holds each relation across its two
+    * writes.
+    */
+  private def writeTables(postings: DataFrame, termdf: Option[DataFrame], doclen: DataFrame,
+      segPath: String, cache: Boolean): Unit = {
+    def held(df: DataFrame)(use: DataFrame => Unit): Unit =
+      if (!cache) use(df)
+      else {
+        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try use(p) finally p.unpersist(): Unit
+      }
+    held(postings) { p =>
+      p.repartition(col("term")).sortWithinPartitions("term")
+        .write.mode("overwrite").parquet(s"$segPath/postings")
+      termdf.getOrElse(p.groupBy("term").agg(count(lit(1)).as("df")))
+        .write.mode("overwrite").parquet(s"$segPath/termdf")
+    }
+    held(doclen) { d =>
+      d.agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
+        .write.mode("overwrite").parquet(s"$segPath/stats")
+      d.write.mode("overwrite").parquet(s"$segPath/doclen")
+    }
+  }
 
   /** The published index's live document-id relation (one column,
     * named whatever the build used) — the narrow doclen ids through
@@ -275,14 +285,8 @@ object Retrieval {
     * listings.
     */
   def liveDocIds(spark: SparkSession, indexPath: String): DataFrame = {
-    val h = IndexManifest.handle(spark, indexPath, "BM25")
-    IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val idCol = docIdCol(spark, h.segments)
-    IndexManifest.memo(spark, h, s"live-doc-ids/$idCol") {
-      IndexManifest.maskLive(
-        IndexManifest.segTableOrd(spark, h, "doclen"),
-        IndexManifest.tombstoneRel(spark, h, idCol), idCol).select(col(idCol))
-    }
+    val h = SegmentedIndex.open(spark, Bm25(), indexPath)
+    Bm25(docIdCol(spark, h.segments)).liveIds(spark, h)
   }
 
   /** The published index's live (id, content_hash) relation — the
@@ -296,8 +300,7 @@ object Retrieval {
     * memo + narrow-scan shape as [[liveDocIds]].
     */
   def liveDocHashes(spark: SparkSession, indexPath: String): DataFrame = {
-    val h = IndexManifest.handle(spark, indexPath, "BM25")
-    IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
+    val h = SegmentedIndex.open(spark, Bm25(), indexPath)
     val idCol = docIdCol(spark, h.segments)
     IndexManifest.memo(spark, h, s"live-doc-hashes/$idCol") {
       // the shared (memoized) segment union is STRICT on schema, but
@@ -318,26 +321,20 @@ object Retrieval {
     * publishing the merged index at `outPath` — the maintenance path a
     * growing corpus needs, mirroring [[Dedup]]'s incremental stance:
     * `increment` must contain only documents NOT already LIVE in the
-    * index (ids disjoint from the indexed-minus-tombstoned set —
-    * [[deleteFromIndex]] followed by updateIndex with the new text IS
-    * the per-document update path). The old corpus is NEVER
-    * re-tokenized — and, since the
-    * segmented layout, never re-WRITTEN either: only the increment's
-    * four tables land on disk, as a brand-new segment directory
+    * index (checked against doclen, the complete indexed id set, minus
+    * tombstones — [[deleteFromIndex]] followed by updateIndex with the
+    * new text IS the per-document update path). The old corpus is
+    * never re-tokenized nor re-written: only the increment's four
+    * tables land on disk, as a new segment directory
     * (`outPath/segments/seg-NNNNN`), and the published manifest lists
-    * (the base index's segments, referenced in place at their
-    * resolved paths, ++ the new one). Bytes written per update are
-    * therefore O(increment), not O(corpus) — at 100 TB a daily delta
-    * must not rewrite the postings daily. Serve paths union the
+    * the base segments in place ++ the new one, so bytes written per
+    * update are O(increment), not O(corpus). Serve paths union the
     * listed segments (per-term df sums and global stats add across
-    * them; each segment keeps its own local term sort for row-group
-    * pruning). `outPath` must differ from `indexPath`: the old index
-    * keeps serving, untouched, until the new manifest lands (written
-    * LAST, as in [[buildIndex]]) — and because the new manifest
-    * references the old segments where they sit, `indexPath` must
-    * stay alive as long as `outPath` serves; [[compactIndex]] is the
-    * explicit O(corpus) merge that re-homes the data when the segment
-    * list grows or the base root is to be retired.
+    * them; each segment keeps its own term sort for row-group pruning).
+    * `outPath` must differ from `indexPath`, and `indexPath` must stay
+    * alive as long as `outPath` serves; [[compactIndex]] is the
+    * explicit O(corpus) merge that re-homes the data. The shared
+    * lifecycle is [[SegmentedIndex]].
     */
   def updateIndex(
       spark: SparkSession,
@@ -345,247 +342,72 @@ object Retrieval {
       increment: DataFrame,
       idCol: String,
       textCol: String,
-      outPath: String): Unit = {
-    require(outPath != indexPath,
-      "updateIndex: outPath must differ from indexPath (the base index keeps serving, " +
-        "and its segments are referenced in place by the updated manifest)")
-    val h = IndexManifest.handle(spark, indexPath, "BM25")
-    IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val (baseSegs, baseTs) = (h.segments, h.tombstones)
-    val inc = invertedIndex(increment, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // enforce the new-docs-only contract LOUDLY: a re-submitted doc
-      // would duplicate its postings, double-count df and stats, and
-      // still earn a valid manifest — exactly the silently-wrong-scores
-      // state the manifest exists to prevent. The check runs against
-      // the LIVE id set — `doclen`, the COMPLETE indexed id set
-      // (unioned across every segment; the postings table only names
-      // docs with >= 1 token, so a previously indexed zero-token doc
-      // would slip a postings-derived guard yet still double-count
-      // n_docs), minus tombstoned ids, so re-adding a DELETED doc is
-      // accepted: delete + update is how a changed document re-enters
-      // the index. One semi-join against the bounded broadcast
-      // increment; the increment side uses the same non-null-text
-      // domain the stats count.
-      val resubmitted = liveIndexedIds(spark, baseSegs, baseTs, idCol)
-        .join(broadcast(increment.where(col(textCol).isNotNull)
-          .select(col(idCol)).distinct()), Seq(idCol), "left_semi")
-        .count()
-      require(resubmitted == 0L,
-        s"updateIndex: $resubmitted increment ids already live at $indexPath — " +
-          "increments must contain NEW documents only (to change an indexed doc, " +
-          "deleteFromIndex it first, then update with the new text)")
-      val seg = s"segments/${IndexManifest.nextSegmentName(baseSegs)}"
-      clearManifest(spark, outPath)
-      writeSegment(increment, idCol, textCol, inc, s"$outPath/$seg")
-      // tombstones carry forward BY REFERENCE like the segments: the
-      // re-added doc's old rows stay masked in the old segment while
-      // its new segment rows serve
-      IndexManifest.write(spark, outPath, version = FormatVersion,
-        segments = IndexManifest.qualify(spark, baseSegs) :+ seg,
-        tombstones = IndexManifest.qualify(spark, baseTs))
-    } finally inc.unpersist()
-  }
+      outPath: String): Unit =
+    SegmentedIndex.update(spark, Bm25(idCol, textCol), indexPath, increment, outPath)
 
   /** DELETE documents from the index at `indexPath`, publishing at
     * `outPath` — the retention / right-to-erasure / document-update
-    * path, with the same O(delta) cost shape as [[updateIndex]]: no
-    * data table is rewritten; the delete lands as a brand-new
-    * tombstone directory (`outPath/tombstones/ts-NNNNN` — the id list
-    * plus a one-row `tsstats` with the deleted docs' (n_docs,
-    * total_len), computed ONCE here from `doclen` so serve-time stats
-    * correction is a tiny negated union instead of a corpus scan per
-    * query batch), and the published manifest lists (base segments
-    * verbatim, base tombstones ++ the new one). Each tombstone row
-    * carries `up_to` = the segment count at delete time, so it masks
-    * ONLY the segments that existed then ([[tombstoneRel]]) — the
-    * sequencing that lets a deleted id re-enter via [[updateIndex]]
-    * without the old tombstone swallowing the new rows. Serve paths
-    * subtract: postings drop masked rows, per-term df subtracts the
-    * masked term-pruned posting counts, stats subtract tsstats —
-    * BM25 scores after a delete are EXACTLY a fresh build's on the
-    * remaining corpus. [[compactIndex]] applies tombstones physically
-    * and clears them. Every delete id must be currently LIVE (indexed,
-    * not already tombstoned): deleting an unknown id is a caller bug
-    * that must fail loudly, and liveness is also what keeps each
-    * row masked by exactly one delete event, so the per-generation
-    * tsstats masses add without overlap.
+    * path, O(delta) like [[updateIndex]]: no data table is rewritten;
+    * the delete lands as a new tombstone directory
+    * (`outPath/tombstones/ts-NNNNN` — the id list plus a one-row
+    * `tsstats` with the deleted docs' (n_docs, total_len), computed
+    * once here from `doclen` so the serve-time stats correction is a
+    * tiny negated union). Serve paths subtract: postings drop masked
+    * rows, per-term df subtracts the masked posting counts, stats
+    * subtract tsstats — BM25 scores after a delete are EXACTLY a fresh
+    * build's on the remaining corpus. [[compactIndex]] applies
+    * tombstones physically. Every delete id must be currently LIVE,
+    * and a null id refuses.
     */
   def deleteFromIndex(
       spark: SparkSession,
       indexPath: String,
       deletes: DataFrame,
       idCol: String,
-      outPath: String): Unit = {
-    require(outPath != indexPath,
-      "deleteFromIndex: outPath must differ from indexPath (the base index keeps serving, " +
-        "and its segments are referenced in place by the new manifest)")
-    val h = IndexManifest.handle(spark, indexPath, "BM25")
-    IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val (segs, baseTs) = (h.segments, h.tombstones)
-    val ids = deletes.select(col(idCol)).where(col(idCol).isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val missing = ids
-        .join(liveIndexedIds(spark, segs, baseTs, idCol), Seq(idCol), "left_anti")
-        .count()
-      require(missing == 0L,
-        s"deleteFromIndex: $missing ids are not live in the index at $indexPath — " +
-          "every delete must name a currently-indexed, not-already-deleted document")
-      val ts = s"tombstones/${IndexManifest.nextTombstoneName(baseTs)}"
-      clearManifest(spark, outPath)
-      ids.withColumn("up_to", lit(segs.size))
-        .write.mode("overwrite").parquet(s"$outPath/$ts/ids")
-      // tsstats = the mass THIS delete removes: the deleted ids'
-      // rows from the LIVE doclen (earlier tombstones already masked
-      // their rows, so generations' masses add without overlap even
-      // across delete/re-add/delete cycles)
-      maskLive(segTableOrd(spark, segs, "doclen"),
-          tombstoneRel(spark, baseTs, idCol), idCol)
-        .join(ids, Seq(idCol), "left_semi")
-        .agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
-        .write.mode("overwrite").parquet(s"$outPath/$ts/tsstats")
-      IndexManifest.write(spark, outPath, version = FormatVersion,
-        segments = IndexManifest.qualify(spark, segs),
-        tombstones = IndexManifest.qualify(spark, baseTs) :+ ts)
-    } finally ids.unpersist()
-  }
+      outPath: String): Unit =
+    SegmentedIndex.delete(spark, Bm25(idCol), indexPath, deletes, outPath)
 
   /** Merge every segment of the index at `indexPath` back into ONE,
-    * published at `outPath` — the compaction half of the segmented
-    * story: [[updateIndex]] keeps daily maintenance O(increment), and
-    * this explicit O(corpus) merge re-homes the data under a single
-    * self-contained segment when the list grows (each query-time df
-    * sum and stats add costs a few extra tiny broadcast rows per
-    * segment) or when a referenced base root is to be retired.
-    * Nothing re-tokenizes: postings are a columnar copy re-sorted
-    * GLOBALLY by term (restoring single-segment row-group pruning),
-    * termdf re-sums, doclen concatenates, stats add. Tombstones are
-    * APPLIED PHYSICALLY here — live rows only land in the compacted
-    * segment, termdf recomputes from the live postings and stats from
-    * the live doclen, and the published manifest carries no tombstones
-    * — compaction is where the LSM delete debt is paid.
+    * published at `outPath` — the explicit O(corpus) half of the
+    * segmented story, run when the segment list grows or a referenced
+    * base root is to be retired. Nothing re-tokenizes: postings are a
+    * columnar copy re-sorted GLOBALLY by term (restoring
+    * single-segment row-group pruning), termdf re-sums, doclen
+    * concatenates, stats add. Tombstones are APPLIED PHYSICALLY here —
+    * compaction is where the LSM delete debt is paid.
     */
-  def compactIndex(spark: SparkSession, indexPath: String, outPath: String): Unit = {
-    require(outPath != indexPath,
-      "compactIndex: outPath must differ from indexPath (cannot overwrite an index being read)")
-    val h = IndexManifest.handle(spark, indexPath, "BM25")
-    IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val (segs, tsPaths) = (h.segments, h.tombstones)
-    val seg = "segments/seg-00000"
-    clearManifest(spark, outPath)
-    val idCol = docIdCol(spark, segs)
-    val tsRel = tombstoneRel(spark, tsPaths, idCol)
-    // the masked relations feed TWO writes each (postings -> postings +
-    // termdf recompute; doclen -> stats + doclen) — persist them so the
-    // segment-union + mask join runs once per relation, the buildIndex
-    // stance. Without tombstones the mask is a no-op and termdf comes
-    // from the cheap per-segment sums, so only doclen double-reads raw
-    // parquet (narrow, as before) — no persist needed.
-    def live(table: String): DataFrame =
-      maskLive(segTableOrd(spark, segs, table), tsRel, idCol)
-    val postings =
-      if (tsPaths.isEmpty) live("postings")
-      else live("postings").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      postings
-        .repartition(col("term"))
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(s"$outPath/$seg/postings")
-      // with deletes in play, per-segment termdf/stats over-count the
-      // tombstoned docs — recompute exactly from the live relations (the
-      // compaction is O(corpus) regardless); without deletes the cheap
-      // segment sums are identical, so keep them
-      if (tsPaths.isEmpty)
-        segTable(spark, segs, "termdf")
-          .groupBy("term").agg(sum("df").as("df"))
-          .write.mode("overwrite").parquet(s"$outPath/$seg/termdf")
-      else
-        postings.groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$outPath/$seg/termdf")
-    } finally if (tsPaths.nonEmpty) postings.unpersist(): Unit
-    val doclen =
-      if (tsPaths.isEmpty) live("doclen")
-      else live("doclen").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      doclen.agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
-        .write.mode("overwrite").parquet(s"$outPath/$seg/stats")
-      doclen.write.mode("overwrite").parquet(s"$outPath/$seg/doclen")
-    } finally if (tsPaths.nonEmpty) doclen.unpersist(): Unit
-    IndexManifest.write(spark, outPath, version = FormatVersion,
-      segments = Seq(seg))
-  }
+  def compactIndex(spark: SparkSession, indexPath: String, outPath: String): Unit =
+    SegmentedIndex.compact(spark, Bm25(), indexPath, outPath)
 
   /** One-row operational summary of a segmented index — the dashboard
     * row an index owner watches and the input to [[needsCompaction]]:
     * (n_segments, n_tombstone_gens, n_docs_indexed, n_docs_masked,
-    * n_docs_live, total_len_live). Everything derives from the
-    * manifest lists plus the per-segment one-row `stats` and
-    * per-tombstone one-row `tsstats` tables — a few KB of metadata
-    * reads, NEVER a corpus scan, so it is safe to poll from a
-    * scheduler deciding when to compact.
+    * n_docs_live, total_len_live). Metadata reads only, NEVER a corpus
+    * scan, so it is safe to poll from a scheduler.
     */
-  def indexInfo(spark: SparkSession, indexPath: String): DataFrame = {
-    val h = IndexManifest.handle(spark, indexPath, "BM25")
-    IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val (segs, tsPaths) = (h.segments, h.tombstones)
-    // a listed segment whose stats parquet exists but is EMPTY
-    // (partial write predating the crash-consistency manifest, or
-    // external truncation) sums to zero: this metadata surface must
-    // degrade, not surface a null that NPEs [[needsCompaction]]
-    val Seq(nIndexed, lenIndexed) = IndexManifest.sumOneRowTables(
-      spark, segs.map(s => s"$s/stats"), Seq("n_docs", "total_len"))
-    val Seq(nMasked, lenMasked) = IndexManifest.sumOneRowTables(
-      spark, tsPaths.map(t => s"$t/tsstats"), Seq("n_docs", "total_len"))
-    IndexManifest.infoRow(spark,
-      "n_segments" -> segs.size, "n_tombstone_gens" -> tsPaths.size,
-      "n_docs_indexed" -> nIndexed, "n_docs_masked" -> nMasked,
-      "n_docs_live" -> (nIndexed - nMasked), "total_len_live" -> (lenIndexed - lenMasked))
-  }
+  def indexInfo(spark: SparkSession, indexPath: String): DataFrame =
+    SegmentedIndex.info(spark, Bm25(), indexPath)
 
   /** The compaction-policy trigger: true when the segment list has
-    * grown past `maxSegments` (each serve pays a few extra tiny
-    * broadcast rows and one more pruned scan per segment) or when the
-    * tombstone-masked share of indexed docs passes `maxMaskedRatio`
-    * (masked rows still occupy disk and still flow through the serve
-    * mask until [[compactIndex]] pays the debt). Metadata-only, like
-    * [[indexInfo]] — poll it, then run the explicit compaction.
+    * grown past `maxSegments` or the tombstone-masked share of indexed
+    * docs passes `maxMaskedRatio`. Metadata-only, like [[indexInfo]] —
+    * poll it, then run the explicit compaction.
     */
   def needsCompaction(
       spark: SparkSession, indexPath: String,
-      maxSegments: Int = 8, maxMaskedRatio: Double = 0.2): Boolean = {
-    require(maxSegments >= 1 && maxMaskedRatio >= 0.0,
-      s"needsCompaction: bad thresholds ($maxSegments, $maxMaskedRatio)")
-    val r = indexInfo(spark, indexPath).head()
-    val indexed = r.getAs[Long]("n_docs_indexed")
-    r.getAs[Int]("n_segments") > maxSegments ||
-      (indexed > 0L && r.getAs[Long]("n_docs_masked").toDouble / indexed > maxMaskedRatio)
-  }
+      maxSegments: Int = 8, maxMaskedRatio: Double = 0.2): Boolean =
+    SegmentedIndex.needsCompaction(spark, Bm25(), indexPath, maxSegments, maxMaskedRatio)
 
-  /** ONE maintenance round as a single documented entry point — the
-    * scheduler loop every index owner otherwise hand-rolls: apply this
-    * round's deletes (if any), merge this round's new-document
-    * increment (if any), then poll [[needsCompaction]] with the given
-    * policy and run [[compactIndex]] if it trips. Returns the path to
-    * SERVE from after the round — `outRoot/deleted`, `outRoot/updated`
-    * or `outRoot/compacted`, whichever ran last (each step publishes a
-    * full manifest, so every intermediate root is also a valid index —
-    * the crash story is unchanged: a failure mid-round leaves the last
-    * published generation serving).
-    *
-    * Cost shape: the delete and update steps stay O(delta) exactly as
-    * their underlying ops; only a tripped policy pays the explicit
-    * O(corpus) compaction — which is the point of routing maintenance
-    * through one place: the policy decides when the debt is paid, not
-    * caller discipline. A no-op round (no deletes, no increment,
-    * policy quiet) returns `indexPath` unchanged. The IVF-PQ twin is
+  /** ONE maintenance round as a single documented entry point: apply
+    * this round's deletes (if any), merge this round's new-document
+    * increment (if any), then poll [[needsCompaction]] and run
+    * [[compactIndex]] if it trips. Returns the path to SERVE from after
+    * the round — `outRoot/deleted`, `outRoot/updated` or
+    * `outRoot/compacted`, whichever ran last, or `indexPath` for a
+    * no-op round. Each step publishes a full manifest, so a failure
+    * mid-round leaves the last published generation serving. `outRoot`
+    * must be FRESH each round (enforced loudly). The IVF-PQ twin is
     * [[Similarity.maintainPqIndex]].
-    *
-    * `outRoot` must be FRESH each round (a new dated/numbered
-    * directory — enforced loudly): feeding a round's returned path
-    * back with the SAME outRoot would make the next tripped
-    * compaction overwrite carried segments it is reading.
     */
   def maintainIndex(
       spark: SparkSession,
@@ -596,28 +418,9 @@ object Retrieval {
       textCol: String,
       outRoot: String,
       maxSegments: Int = 8,
-      maxMaskedRatio: Double = 0.2): String = {
-    require(outRoot != indexPath,
-      "maintainIndex: outRoot must differ from indexPath (steps publish under it)")
-    // each round needs a FRESH root: reusing one outRoot feeds round
-    // N's compacted output back under round N+1's output, and the next
-    // tripped compaction would overwrite segments it is reading
-    IndexManifest.requireDisjointRoot(spark, indexPath, outRoot, "BM25")
-    var cur = indexPath
-    deletes.foreach { d =>
-      deleteFromIndex(spark, cur, d, idCol, s"$outRoot/deleted")
-      cur = s"$outRoot/deleted"
-    }
-    increment.foreach { inc =>
-      updateIndex(spark, cur, inc, idCol, textCol, s"$outRoot/updated")
-      cur = s"$outRoot/updated"
-    }
-    if (needsCompaction(spark, cur, maxSegments, maxMaskedRatio)) {
-      compactIndex(spark, cur, s"$outRoot/compacted")
-      cur = s"$outRoot/compacted"
-    }
-    cur
-  }
+      maxMaskedRatio: Double = 0.2): String =
+    SegmentedIndex.maintain(spark, Bm25(idCol, textCol), indexPath, deletes, increment,
+      outRoot, maxSegments, maxMaskedRatio)
 
   /** ONE streaming micro-batch's index-ingest round — the
     * EXACTLY-ONCE unit [[graft.streaming.Streams.bm25IndexIngest]]
@@ -626,39 +429,15 @@ object Retrieval {
     * currently publishes, let the compaction policy amortize the
     * segment debt, and flip the pointer to the new generation. Keyed
     * by `batchId` (`ingestRoot/batch-<id>`), the round is IDEMPOTENT
-    * under Structured Streaming's replay contract — a batch
-    * re-executed after a crash lands in exactly one of three states,
-    * each healed without re-indexing:
-    *
-    *  - COMMITTED (a manifest stands under the batch root): the crash
-    *    fell between commit and pointer flip — re-publish the pointer
-    *    at the committed step and stop. A compaction that crashed
-    *    AFTER its update step committed leaves uncommitted `compacted`
-    *    residue beside a valid `updated` chain: the residue is deleted
-    *    (nothing references an uncommitted root) and the valid chain
-    *    serves — the policy re-evaluates next batch.
-    *  - HALF-WRITTEN (the batch root exists, no manifest): delete the
-    *    residue wholesale and re-run — the manifest-last protocol
-    *    means nothing serves it.
-    *  - FRESH: run the round.
-    *
-    * An empty batch publishes NOTHING (no generation, no pointer
-    * movement) — the next batch chains from the pointer unchanged.
-    * With `keepGenerations` set, every committed round ends with
-    * [[IndexManifest.retainGenerations]] on the pointer's own history:
-    * superseded per-batch generations are vacuumed as soon as a
-    * compaction re-homes the segments they carried, so a long-running
-    * ingest's disk footprint is (current chain + rollback window +
-    * still-carried generations), not one root per batch forever.
-    *
-    * Scale shape: the stream side does no shuffle and holds no state —
-    * each round is [[updateIndex]]'s O(batch) tokenize + segment write
-    * (plus the liveness guard's id-column scan), and only a tripped
-    * policy pays the O(corpus) compaction. Readers resolve the pointer
-    * per query and always see a complete generation (manifest-last +
-    * atomic pointer rename). Reference counterpart: none — ironbeam
-    * is batch-only; this is the continuous-ingest sibling of
-    * [[maintainIndex]].
+    * under Structured Streaming's replay contract
+    * ([[IndexManifest.ingestRound]]: a committed batch re-flips, a
+    * half-written one is cleared and re-run). An empty batch publishes
+    * nothing; rows with a null id or text are nothing to index and are
+    * dropped. With `keepGenerations` set, every committed round ends
+    * with [[IndexManifest.retainGenerations]] on the pointer's own
+    * history, so a long-running ingest's disk footprint stays bounded.
+    * Reference counterpart: none — ironbeam is batch-only; this is the
+    * continuous-ingest sibling of [[maintainIndex]].
     */
   def ingestIndexBatch(
       spark: SparkSession,
@@ -673,36 +452,22 @@ object Retrieval {
       keepGenerations: Option[Int] = None,
       snapshotPath: Option[String] = None,
       nightlyMarkerPath: Option[String] = None): Unit =
-    IndexManifest.ingestRound(spark, batch.where(col(textCol).isNotNull),
-      batchId, pointerPath, ingestRoot, "BM25",
-      (rows, cur, outRoot) => maintainIndex(spark, cur, None, Some(rows),
-        idCol, textCol, outRoot, maxSegments, maxMaskedRatio),
-      keepGenerations, snapshotPath, nightlyMarkerPath)
+    SegmentedIndex.ingest(spark, Bm25(idCol, textCol), batch, batchId, pointerPath,
+      ingestRoot, maxSegments, maxMaskedRatio, keepGenerations, snapshotPath, nightlyMarkerPath)
 
   /** [[ingestIndexBatch]]'s UPSERT form — the CDC-shaped stream where
     * a batch row is "the current version of this document", new or
     * not: ids already live in the pointer's generation are tombstoned
     * first and every batch row then lands as the increment, so a
     * replaced document's old postings stop serving in the SAME
-    * generation its new text starts (the LSM delete + re-add update
-    * path, one maintain round, one pointer flip). Additive batches pay
-    * one extra id-column semi-join against the live set (the split is
-    * the same footer-pruned scan as the write guards — the price of
-    * knowing which rows replace); brand-new-only streams should prefer
-    * [[ingestIndexBatch]], which skips it.
-    *
-    * Malformed rows refuse LOUDLY instead of silently narrowing the
-    * batch — each is an ambiguity this surface has no way to resolve:
-    * two rows for one id have no version column to order them
-    * (last-write-wins would be a nondeterministic lie under Spark's
-    * unordered batches — collapse versions upstream, e.g. through a
-    * `latest_per_key` step); a null id names no document; a null text
-    * looks like a deletion, but silently skipping it would leave the
-    * STALE version serving — route real deletions through the nightly
-    * tier. (The additive [[ingestIndexBatch]] keeps its drop-null-text
-    * behavior: there "null text" is just "nothing to index", with no
-    * stale version to betray.) Same exactly-once replay story as the
-    * engine: the batchId-keyed root heals instead of double-applying.
+    * generation its new text starts. Malformed rows refuse LOUDLY
+    * before any state changes: two rows for one id (no version column
+    * orders them — collapse versions upstream, e.g. through a
+    * `latest_per_key` step), a null id, and a null text (a deletion in
+    * disguise that would leave the stale version serving — route real
+    * deletions through the maintenance tier). Brand-new-only streams
+    * should prefer [[ingestIndexBatch]], which skips the live-set
+    * semi-join.
     */
   def ingestUpsertBatch(
       spark: SparkSession,
@@ -716,44 +481,9 @@ object Retrieval {
       maxMaskedRatio: Double = 0.2,
       keepGenerations: Option[Int] = None,
       snapshotPath: Option[String] = None,
-      nightlyMarkerPath: Option[String] = None): Unit = {
-    // ONE bounded aggregate validates the whole batch BEFORE any state
-    // changes (and before any filtering could hide a malformed row
-    // from the checks) — shared verbatim with the vector/side upserts
-    // so the three families' refusal contracts cannot drift
-    val n = IndexManifest.requireUpsertBatch(batch, batchId, idCol, Some(textCol),
-      "ingestUpsertBatch")
-    IndexManifest.ingestRound(spark, batch,
-      batchId, pointerPath, ingestRoot, "BM25",
-      (rows, cur, outRoot) => {
-        // persist the replaced-id split so the live-set scan runs ONCE:
-        // the emptiness branch and deleteFromIndex's own ids read both
-        // hit the cached result, not a re-materialized semi-join
-        val replaced = rows.select(col(idCol))
-          .join(liveDocIds(spark, cur), Seq(idCol), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val deletes = if (replaced.count() == 0L) None else Some(replaced)
-          maintainIndex(spark, cur, deletes, Some(rows),
-            idCol, textCol, outRoot, maxSegments, maxMaskedRatio)
-        } finally replaced.unpersist()
-      },
-      keepGenerations, snapshotPath, nightlyMarkerPath, Some(n))
-  }
-
-  /** Format version 3 = segmented layout (manifest carries the
-    * segment list; every table sits under `segments/<name>/`). All
-    * paths — serve and maintenance — require it, so an index
-    * published by a pre-segment build answers "rebuild" instead of a
-    * missing-parquet crash.
-    */
-  private val FormatVersion = 3
-
-  private def clearManifest(spark: SparkSession, path: String): Unit =
-    IndexManifest.clear(spark, path)
-
-  private def requireManifest(spark: SparkSession, path: String, minVersion: Int = FormatVersion): Unit =
-    IndexManifest.requirePresent(spark, path, "BM25", minVersion)
+      nightlyMarkerPath: Option[String] = None): Unit =
+    SegmentedIndex.ingestUpsert(spark, Bm25(idCol, textCol), batch, batchId, pointerPath,
+      ingestRoot, maxSegments, maxMaskedRatio, keepGenerations, snapshotPath, nightlyMarkerPath)
 
   /** BM25 top-k against a prebuilt index — the serve path. The ONLY
     * corpus-sized relation in the plan is the postings scan, and the
@@ -802,9 +532,7 @@ object Retrieval {
     // ONE handle resolution per serve call (presence + version +
     // segments + tombstones) — on an object store every extra
     // resolution is a listing round trip
-    val h = IndexManifest.handle(spark, indexPath, "BM25")
-    IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
-    val (segs, tsPaths) = (h.segments, h.tombstones)
+    val h = SegmentedIndex.open(spark, Bm25(), indexPath)
     // evaluate the caller's relation EXACTLY ONCE: both the In-filter
     // term list and the scoring join are rebuilt from this one collect,
     // so a non-deterministic queries source (a sample, an unordered
@@ -834,7 +562,7 @@ object Retrieval {
     val postings = IndexManifest.tombstoneRel(spark, h, idCol) match {
       case None => pruned
       case Some(ts) =>
-        maskLive(IndexManifest.segTableOrd(spark, h, "postings")
+        IndexManifest.maskLive(IndexManifest.segTableOrd(spark, h, "postings")
           .where(col("term").isin(terms: _*)), Some(ts), idCol)
     }
     postings
@@ -1059,8 +787,7 @@ object Retrieval {
       indexPath: String,
       terms: Seq[String]): (Map[String, Long], Long, Long) = {
     require(terms.nonEmpty, "queryConstants: empty query")
-    val h = IndexManifest.handle(spark, indexPath, "BM25")
-    IndexManifest.requireVersion(h, indexPath, "BM25", FormatVersion)
+    val h = SegmentedIndex.open(spark, Bm25(), indexPath)
     val idCol = docIdCol(spark, h.segments)
     val (dfs, stats) = liveTermStats(spark, h, terms.distinct, idCol)
     val dfMap = dfs.collect().map(r => r.getString(0) -> r.getLong(1))

@@ -632,29 +632,56 @@ object Similarity {
       coarseCents: Array[Array[Float]],
       codebooks: Array[Array[Array[Float]]],
       path: String,
-      residual: Boolean = false): Unit = {
-    val spark = candidates.sparkSession
-    IndexManifest.clear(spark, path)
-    val encoded =
-      if (residual) pqResidualIndex(candidates, idCol, vecCol, coarseCents, codebooks)
-      else pqIndex(candidates, idCol, vecCol, coarseCents, codebooks)
-    val seg = "segments/seg-00000"
-    encoded.write.partitionBy("cell").mode("overwrite").parquet(s"$path/$seg/vectors")
-    writeSegStats(spark, s"$path/$seg")
-    IndexManifest.write(spark, path, version = PqFormatVersion,
-      flavor = pqFlavor(residual), segments = Seq(seg))
+      residual: Boolean = false): Unit =
+    SegmentedIndex.build(Pq(idCol, vecCol, coarseCents, codebooks, Some(residual)),
+      candidates, path)
+
+  /** The IVF-PQ family of the shared [[SegmentedIndex]] lifecycle: a
+    * segment is a batch's vectors encoded under the FROZEN quantizer
+    * models (non-residual or residual, recorded as the manifest
+    * flavor), partitioned by cell, plus a one-row `stats` (n_vecs); the
+    * index stores ids as `neighbor_id`. `residual` names the encode a
+    * call expects, which every open checks against the flavor.
+    */
+  private final case class Pq(
+      idCol: String = "",
+      vecCol: String = "",
+      coarseCents: Array[Array[Float]] = Array.empty,
+      codebooks: Array[Array[Array[Float]]] = Array.empty,
+      residual: Option[Boolean] = None) extends SegmentedIndex.Family {
+    def what: String = "IVF-PQ"
+    def stem: String = "vecs"
+    override def flavor: Option[String] = residual.map(pqFlavor)
+    override def indexIdCol: String = "neighbor_id"
+    override def payloadCol: Option[String] = Some(vecCol)
+    override def infoFlavor: Boolean = true
+
+    def writeSegment(vectors: DataFrame, segPath: String): Unit =
+      writeVectors(
+        if (residual.contains(true)) pqResidualIndex(vectors, idCol, vecCol, coarseCents, codebooks)
+        else pqIndex(vectors, idCol, vecCol, coarseCents, codebooks),
+        segPath)
+
+    // no re-encode: the live (cell, codes, norm) rows are a columnar
+    // copy, so serve plans over the compacted index match a fresh build's
+    def rehome(spark: SparkSession, h: IndexManifest.Handle, segPath: String): Unit =
+      writeVectors(liveVectors(spark, h), segPath)
+
+    def liveIds(spark: SparkSession, h: IndexManifest.Handle): DataFrame =
+      liveVectors(spark, h).select(col("neighbor_id"))
+
+    def incrementIds(increment: DataFrame): DataFrame =
+      broadcast(increment.select(col(idCol).as("neighbor_id")).distinct())
   }
 
-  /** One-row `stats` table beside a segment's vectors (n_vecs) — the
-    * metadata [[pqIndexInfo]] sums so an operational poll never scans
-    * the codes. Counted from the just-written parquet: a count(*)
-    * over parquet resolves from file footers, so the extra job reads
-    * no vector bytes.
+  /** One segment's tables: the encoded rows partitioned by cell (the
+    * broadcast cell join prunes a serve scan to the probed partitions)
+    * and their one-row `stats`.
     */
-  private def writeSegStats(spark: SparkSession, segPath: String): Unit =
-    IndexManifest.readDir(spark, s"$segPath/vectors")
-      .agg(count(lit(1)).as("n_vecs"))
-      .write.mode("overwrite").parquet(s"$segPath/stats")
+  private def writeVectors(encoded: DataFrame, segPath: String): Unit = {
+    encoded.write.partitionBy("cell").mode("overwrite").parquet(s"$segPath/vectors")
+    SegmentedIndex.writeCountStats(encoded.sparkSession, segPath, "vectors", "n_vecs")
+  }
 
   private def pqFlavor(residual: Boolean): String =
     if (residual) "pq-residual" else "pq-direct"
@@ -681,78 +708,49 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String, path: String): Unit =
     SideIndex.build(embeddingIndexRows(corpus, idCol, vecCol), "vec_id", "embedding", path)
 
-  /** Format version 3 = segmented layout WITH per-segment `stats` and
-    * per-tombstone `tsstats` one-row tables (the [[Retrieval]] index's
-    * metadata stance, mirrored). Serve and maintenance paths require
-    * it, so an index published by an older build answers "rebuild"
-    * instead of a missing-parquet crash.
-    */
-  private val PqFormatVersion = 3
-
   /** Read back a [[writePqIndex]]-published index — the UNION of every
     * segment the manifest lists, validated first: serving from a
     * half-written index fails loudly here instead of silently missing
     * cells, and a segment written by a crashed update is invisible
     * until its manifest commits.
     */
-  def readPqIndex(spark: SparkSession, path: String): DataFrame = {
-    // one handle resolution for presence + version + segments +
-    // tombstones (each extra resolution is a listing round trip on an
-    // object store)
-    val h = IndexManifest.handle(spark, path, "IVF-PQ")
-    IndexManifest.requireVersion(h, path, "IVF-PQ", PqFormatVersion)
-    val segs = h.segments
-    // one read PER segment, then union — segments are cell-partitioned
-    // directories under DIFFERENT roots, and a single multi-path scan
-    // would make Spark infer one partition spec across roots (it
-    // refuses: CONFLICTING_DIRECTORY_STRUCTURES). Catalyst pushes a
-    // serve's cell filter through the Union into each scan, so
-    // per-segment partition pruning is preserved.
-    // tombstoned vectors leave via ONE sequenced-mask join — only when
-    // deletes exist, so the common no-deletes plan is untouched. Each
-    // tombstone row carries `up_to` (the segment count at delete
-    // time), and a row dies iff its id is tombstoned AND its segment
-    // ordinal predates that horizon — so a vector deleted and then
-    // RE-EMBEDDED via updatePqIndex serves its new segment's row while
-    // the old one stays masked (a bare id mask would swallow both —
-    // the classic LSM sequencing bug); per-id MAX horizon covers
-    // delete/re-add/delete chains. Every reader (serve, update guard,
-    // compaction) goes through here, so deleted vectors can never
-    // serve, double-count, or survive a re-home.
-    val tsPaths = h.tombstones
-    // the assembled (and, with deletes, masked) vector union comes off
-    // the Handle's per-generation memo: segments are immutable once
-    // published, and re-assembling the plan costs a driver listing +
-    // footer read per segment per serve call
+  def readPqIndex(spark: SparkSession, path: String): DataFrame =
+    liveVectors(spark, SegmentedIndex.open(spark, Pq(), path))
+
+  /** The live vectors of a loaded handle. One read PER segment, then
+    * union — segments are cell-partitioned directories under DIFFERENT
+    * roots, and a single multi-path scan would make Spark infer one
+    * partition spec across roots (it refuses:
+    * CONFLICTING_DIRECTORY_STRUCTURES). Catalyst pushes a serve's cell
+    * filter through the Union into each scan, so per-segment partition
+    * pruning is preserved. Tombstoned vectors leave via ONE sequenced
+    * mask join ([[IndexManifest.maskLive]]) — only when deletes exist,
+    * so the common no-deletes plan is untouched; a vector deleted and
+    * then re-embedded serves its new segment's row while the old one
+    * stays masked. Every reader (serve, write guards, compaction) goes
+    * through here, and the assembled relation rides the Handle memo.
+    */
+  private def liveVectors(spark: SparkSession, h: IndexManifest.Handle): DataFrame =
     IndexManifest.memo(spark, h, "vectors-live") {
       IndexManifest.tombstoneRel(spark, h, "neighbor_id") match {
         case None =>
-          segs.map(s => IndexManifest.readDir(spark, s"$s/vectors")).reduce(_.unionByName(_))
+          h.segments.map(s => IndexManifest.readDir(spark, s"$s/vectors")).reduce(_.unionByName(_))
         case some =>
-          // the sequencing rule is IndexManifest's — shared verbatim with
-          // the BM25 tier, one implementation of the invariant
           IndexManifest.maskLive(
             IndexManifest.segTableOrd(spark, h, "vectors"), some, "neighbor_id")
       }
     }
-  }
 
   /** DELETE vectors from the IVF-PQ index at `indexPath`, publishing
     * at `outPath` — the retention / right-to-erasure / re-embed path,
     * O(delta) like [[updatePqIndex]]: nothing re-encodes and no
-    * segment is rewritten; the delete lands as a brand-new tombstone
-    * id list (`outPath/tombstones/ts-NNNNN/ids`, keyed `neighbor_id`)
-    * and the published manifest lists (base segments verbatim, base
-    * tombstones ++ the new one). Each tombstone row carries `up_to` =
-    * the segment count at delete time, so it masks only the segments
-    * that existed then — the sequencing that lets a deleted id
-    * re-enter via [[updatePqIndex]] (the supported re-embed update)
-    * without the old tombstone swallowing the new rows.
-    * [[readPqIndex]] applies the mask, so every serve and maintenance
-    * path sees only live vectors; [[compactPqIndex]] applies
-    * tombstones physically (it reads through readPqIndex) and clears
-    * them. Every delete id must be currently LIVE — deleting an
-    * unknown or already-deleted id fails loudly. The flavor carries
+    * segment is rewritten; the delete lands as a new tombstone
+    * generation (`outPath/tombstones/ts-NNNNN`, keyed `neighbor_id`)
+    * whose horizon lets a deleted id re-enter via [[updatePqIndex]]
+    * (the supported re-embed update). [[readPqIndex]] applies the mask,
+    * so every serve and maintenance path sees only live vectors;
+    * [[compactPqIndex]] applies tombstones physically. Every delete id
+    * must be currently LIVE, and a null id refuses. The flavor carries
     * over: a delete never changes the encode identity.
     */
   def deleteFromPqIndex(
@@ -760,70 +758,26 @@ object Similarity {
       indexPath: String,
       deletes: DataFrame,
       idCol: String,
-      outPath: String): Unit = {
-    require(outPath != indexPath,
-      "deleteFromPqIndex: outPath must differ from indexPath (the base index keeps serving, " +
-        "and its segments are referenced in place by the new manifest)")
-    val live = readPqIndex(spark, indexPath)
-    val base = IndexManifest.handle(spark, indexPath, "IVF-PQ")
-    val (segs, baseTs, flavor) = (base.segments, base.tombstones, base.flavor)
-    val ids = deletes.select(col(idCol).as("neighbor_id"))
-      .where(col("neighbor_id").isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val missing = ids
-        .join(live.select(col("neighbor_id")), Seq("neighbor_id"), "left_anti")
-        .count()
-      require(missing == 0L,
-        s"deleteFromPqIndex: $missing ids are not live in the index at $indexPath — " +
-          "every delete must name a currently-indexed, not-already-deleted vector")
-      val ts = s"tombstones/${IndexManifest.nextTombstoneName(baseTs)}"
-      IndexManifest.clear(spark, outPath)
-      ids.withColumn("up_to", lit(segs.size))
-        .write.mode("overwrite").parquet(s"$outPath/$ts/ids")
-      // one-row tsstats: the masked-vector mass this generation adds,
-      // so pqIndexInfo's masked count stays a metadata read
-      ids.agg(count(lit(1)).as("n_vecs"))
-        .write.mode("overwrite").parquet(s"$outPath/$ts/tsstats")
-      IndexManifest.write(spark, outPath, version = PqFormatVersion,
-        flavor = flavor, segments = IndexManifest.qualify(spark, segs),
-        tombstones = IndexManifest.qualify(spark, baseTs) :+ ts)
-    } finally ids.unpersist()
-  }
+      outPath: String): Unit =
+    SegmentedIndex.delete(spark, Pq(idCol), indexPath, deletes, outPath)
 
   /** Merge an INCREMENT of new vectors into the IVF-PQ index at
     * `indexPath`, publishing the merged index at `outPath` — the daily
     * embedding-delta maintenance path, mirroring
-    * [[Retrieval.updateIndex]]'s stance exactly: the old corpus is
-    * NEVER re-encoded (its (cell, codes, norm) rows read back from
-    * parquet — a columnar copy, not a recompute), only the increment
-    * pays the nearest-cell argmax + subspace encodes, and it does so
-    * against the FROZEN `coarseCents`/`codebooks` the index was built
-    * with — quantizer models are part of the index identity, and
-    * re-training them would silently shift every existing code's
-    * meaning (re-train means rebuild). `increment` ids must be
-    * disjoint from the indexed ids (enforced loudly: a re-submitted
-    * vector would serve twice); `outPath` must differ from `indexPath`
-    * (the old index keeps serving, untouched, until the new manifest
-    * lands LAST — and the new index references the old segments where
-    * they sit, so `indexPath` must stay alive as long as `outPath`
-    * serves; [[compactPqIndex]] is the explicit path that re-homes
-    * the data when segment count or lifecycle demands it). Set
-    * `residual = true` when the index was built from
-    * [[pqResidualIndex]] with [[trainResidualCodebooks]] models — the
-    * increment then encodes offsets from the coarse centroids, like
-    * every existing row. The encode flavor is part of the index
-    * identity exactly as the models are: the manifest RECORDS it at
-    * build, and a mismatched flag fails loudly here — mixing flavors
-    * would serve silently wrong ADC scores.
-    *
-    * Cost shape — the reason this path exists: the increment lands as
-    * a brand-new segment directory (`outPath/segments/seg-NNNNN`,
-    * partitioned by cell like every segment) and the published
-    * manifest lists (the base index's segments, referenced in place
-    * at their resolved paths, ++ the new one) — so the bytes written
-    * per update are O(increment), not O(corpus). At 100 TB, a daily
-    * delta must not rewrite the index daily.
+    * [[Retrieval.updateIndex]]: the old corpus is NEVER re-encoded or
+    * re-written, and only the increment pays the nearest-cell argmax +
+    * subspace encodes, against the FROZEN `coarseCents`/`codebooks` the
+    * index was built with — quantizer models are part of the index
+    * identity, and re-training them would silently shift every
+    * existing code's meaning (re-train means rebuild). The increment
+    * lands as one new cell-partitioned segment, so bytes written per
+    * update are O(increment). `increment` ids must not be live already
+    * (enforced loudly); `outPath` must differ from `indexPath`, which
+    * must stay alive as long as `outPath` serves. Set `residual = true`
+    * when the index was built from [[pqResidualIndex]] with
+    * [[trainResidualCodebooks]] models: the manifest RECORDS the encode
+    * flavor at build, and a mismatched flag fails loudly — mixing
+    * flavors would serve silently wrong ADC scores.
     */
   def updatePqIndex(
       spark: SparkSession,
@@ -834,131 +788,43 @@ object Similarity {
       coarseCents: Array[Array[Float]],
       codebooks: Array[Array[Array[Float]]],
       outPath: String,
-      residual: Boolean = false): Unit = {
-    require(outPath != indexPath,
-      "updatePqIndex: outPath must differ from indexPath (the base index keeps serving, " +
-        "and its segments are referenced in place by the updated manifest)")
-    val old = readPqIndex(spark, indexPath)
-    val base = IndexManifest.handle(spark, indexPath, "IVF-PQ")
-    // the manifest records which encode built the index — merging the
-    // other flavor would serve silently wrong ADC scores, so a
-    // mismatched flag fails here instead of trusting caller discipline
-    require(base.flavor == pqFlavor(residual),
-      s"IVF-PQ index at $indexPath was built with encode flavor '${base.flavor}' but this " +
-        s"operation expects '${pqFlavor(residual)}' — the flavor is part of the index " +
-        "identity; pass the matching flag or rebuild")
-    val encoded =
-      if (residual) pqResidualIndex(increment, idCol, vecCol, coarseCents, codebooks)
-      else pqIndex(increment, idCol, vecCol, coarseCents, codebooks)
-    val inc = encoded
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the new-vectors-only contract, enforced the updateIndex way:
-      // one semi-join of the old id column (columnar-pruned) against
-      // the bounded broadcast increment
-      val resubmitted = old.select(col("neighbor_id")).distinct()
-        .join(broadcast(inc.select(col("neighbor_id")).distinct()),
-          Seq("neighbor_id"), "left_semi")
-        .count()
-      require(resubmitted == 0L,
-        s"updatePqIndex: $resubmitted increment ids already indexed at $indexPath — " +
-          "increments must contain NEW vectors only (re-indexing a changed vector means rebuild)")
-      // the base generation's segments AND tombstones carry over BY
-      // REFERENCE — their resolved (absolute) paths go into the new
-      // manifest verbatim; only the increment's rows are written, as
-      // one new segment. Carrying tombstones is what closes the
-      // delete-then-re-add re-embed path: the old rows stay masked in
-      // their segment while the new segment's rows serve (the guard
-      // above checks the LIVE set, so a deleted id re-enters cleanly).
-      val (baseSegs, baseTs) = (base.segments, base.tombstones)
-      val seg = s"segments/${IndexManifest.nextSegmentName(baseSegs)}"
-      IndexManifest.clear(spark, outPath)
-      inc.write.partitionBy("cell").mode("overwrite").parquet(s"$outPath/$seg/vectors")
-      writeSegStats(spark, s"$outPath/$seg")
-      // the merged index must carry the SAME flavor the base recorded,
-      // or the next generation's requireFlavor refuses both flags and
-      // the daily-delta chain dies after one update
-      IndexManifest.write(spark, outPath, version = PqFormatVersion,
-        flavor = pqFlavor(residual),
-        segments = IndexManifest.qualify(spark, baseSegs) :+ seg,
-        tombstones = IndexManifest.qualify(spark, baseTs))
-    } finally inc.unpersist()
-  }
+      residual: Boolean = false): Unit =
+    SegmentedIndex.update(spark, Pq(idCol, vecCol, coarseCents, codebooks, Some(residual)),
+      indexPath, increment, outPath)
 
   /** Merge every segment of the index at `indexPath` back into ONE,
-    * published at `outPath` — the compaction half of the segmented
-    * maintenance story: [[updatePqIndex]] keeps appends O(increment),
-    * and when the segment count (or a retired base root's lifecycle)
-    * says so, this explicit O(corpus) columnar copy re-homes all the
-    * data under a single self-contained segment with no cross-root
-    * references. No re-encode anywhere — the (cell, codes, norm) rows
-    * are read back and rewritten partitioned by cell, so serve plans
-    * over the compacted index are identical in shape to a fresh
-    * build's, and serve RESULTS are identical to the segmented
-    * index's (the rows are the same set). Tombstones are applied
-    * PHYSICALLY — the read goes through [[readPqIndex]], which
-    * subtracts them, and the published manifest carries none — so
-    * compaction is also how deleted vectors' bytes actually leave
-    * disk. The flavor carries over from the source manifest.
+    * published at `outPath` — the explicit O(corpus) columnar copy
+    * that re-homes all the data under a single self-contained segment
+    * with no cross-root references. No re-encode: serve plans over the
+    * compacted index match a fresh build's in shape, and serve RESULTS
+    * match the segmented index's. Tombstones are applied PHYSICALLY,
+    * so compaction is also how deleted vectors' bytes leave disk. The
+    * flavor carries over from the source manifest.
     */
-  def compactPqIndex(spark: SparkSession, indexPath: String, outPath: String): Unit = {
-    require(outPath != indexPath,
-      "compactPqIndex: outPath must differ from indexPath (cannot overwrite an index being read)")
-    val all = readPqIndex(spark, indexPath)
-    val flavor = IndexManifest.handle(spark, indexPath, "IVF-PQ").flavor
-    val seg = "segments/seg-00000"
-    IndexManifest.clear(spark, outPath)
-    all.write.partitionBy("cell").mode("overwrite").parquet(s"$outPath/$seg/vectors")
-    writeSegStats(spark, s"$outPath/$seg")
-    IndexManifest.write(spark, outPath, version = PqFormatVersion,
-      flavor = flavor, segments = Seq(seg))
-  }
+  def compactPqIndex(spark: SparkSession, indexPath: String, outPath: String): Unit =
+    SegmentedIndex.compact(spark, Pq(), indexPath, outPath)
 
   /** One-row operational summary of a segmented IVF-PQ index — the
     * [[Retrieval.indexInfo]] twin: (n_segments, n_tombstone_gens,
-    * flavor, n_vecs_indexed, n_vecs_masked, n_vecs_live). Everything
-    * derives from the manifest lists plus the per-segment one-row
-    * `stats` and per-tombstone one-row `tsstats` tables — a few KB of
-    * metadata reads, NEVER a codes scan, so it is safe to poll from a
-    * scheduler deciding when to compact. Masked means tombstoned rows
-    * still occupying segment bytes; live = indexed - masked (a
-    * re-embedded vector counts once in its new segment and once as
-    * masked debt in its old one, exactly the disk reality compaction
-    * collects). Empty stats tables coalesce to zeros — a truncated
-    * segment must degrade the poll, not NPE it.
+    * flavor, n_vecs_indexed, n_vecs_masked, n_vecs_live). Metadata
+    * reads only, NEVER a codes scan, so it is safe to poll. Masked
+    * means tombstoned rows still occupying segment bytes (a re-embedded
+    * vector counts once in its new segment and once as masked debt in
+    * its old one, exactly the disk reality compaction collects).
     */
-  def pqIndexInfo(spark: SparkSession, indexPath: String): DataFrame = {
-    val h = IndexManifest.handle(spark, indexPath, "IVF-PQ")
-    IndexManifest.requireVersion(h, indexPath, "IVF-PQ", PqFormatVersion)
-    val (segs, tsPaths, flavor) = (h.segments, h.tombstones, h.flavor)
-    val Seq(nIndexed) = IndexManifest.sumOneRowTables(
-      spark, segs.map(s => s"$s/stats"), Seq("n_vecs"))
-    val Seq(nMasked) = IndexManifest.sumOneRowTables(
-      spark, tsPaths.map(t => s"$t/tsstats"), Seq("n_vecs"))
-    IndexManifest.infoRow(spark,
-      "n_segments" -> segs.size, "n_tombstone_gens" -> tsPaths.size, "flavor" -> flavor,
-      "n_vecs_indexed" -> nIndexed, "n_vecs_masked" -> nMasked,
-      "n_vecs_live" -> (nIndexed - nMasked))
-  }
+  def pqIndexInfo(spark: SparkSession, indexPath: String): DataFrame =
+    SegmentedIndex.info(spark, Pq(), indexPath)
 
   /** The compaction-policy trigger for the IVF-PQ tier, mirroring
     * [[Retrieval.needsCompaction]]: trips when the segment list grows
-    * past `maxSegments` (each serve pays one more pruned scan per
-    * segment) or the tombstone-masked share of indexed vectors passes
-    * `maxMaskedRatio` (masked codes still occupy disk and flow through
-    * the serve mask until [[compactPqIndex]] pays the debt).
-    * Metadata-only via [[pqIndexInfo]] — poll-safe.
+    * past `maxSegments` or the tombstone-masked share of indexed
+    * vectors passes `maxMaskedRatio`. Metadata-only via
+    * [[pqIndexInfo]] — poll-safe.
     */
   def needsPqCompaction(
       spark: SparkSession, indexPath: String,
-      maxSegments: Int = 8, maxMaskedRatio: Double = 0.2): Boolean = {
-    require(maxSegments >= 1 && maxMaskedRatio >= 0.0,
-      s"needsPqCompaction: bad thresholds ($maxSegments, $maxMaskedRatio)")
-    val r = pqIndexInfo(spark, indexPath).head()
-    val indexed = r.getAs[Long]("n_vecs_indexed")
-    r.getAs[Int]("n_segments") > maxSegments ||
-      (indexed > 0L && r.getAs[Long]("n_vecs_masked").toDouble / indexed > maxMaskedRatio)
-  }
+      maxSegments: Int = 8, maxMaskedRatio: Double = 0.2): Boolean =
+    SegmentedIndex.needsCompaction(spark, Pq(), indexPath, maxSegments, maxMaskedRatio)
 
   /** ONE maintenance round for the IVF-PQ index as a single entry
     * point — [[Retrieval.maintainIndex]]'s vector twin: apply this
@@ -966,12 +832,8 @@ object Similarity {
     * (encoded against the index's FROZEN models, if any), then poll
     * [[needsPqCompaction]] and run [[compactPqIndex]] if the policy
     * trips. Returns the path to SERVE from (`outRoot/deleted`,
-    * `outRoot/updated` or `outRoot/compacted`, whichever ran last);
-    * every intermediate root is a fully-published index, so a crash
-    * mid-round leaves the last committed generation serving. Delete
-    * and update stay O(delta); only a tripped policy pays the explicit
-    * O(corpus) re-home. `outRoot` must be FRESH each round (enforced
-    * loudly — see [[Retrieval.maintainIndex]]).
+    * `outRoot/updated` or `outRoot/compacted`, whichever ran last).
+    * `outRoot` must be FRESH each round (enforced loudly).
     */
   def maintainPqIndex(
       spark: SparkSession,
@@ -985,41 +847,17 @@ object Similarity {
       outRoot: String,
       residual: Boolean = false,
       maxSegments: Int = 8,
-      maxMaskedRatio: Double = 0.2): String = {
-    require(outRoot != indexPath,
-      "maintainPqIndex: outRoot must differ from indexPath (steps publish under it)")
-    // each round needs a FRESH root — see Retrieval.maintainIndex: a
-    // reused outRoot makes the next tripped compaction overwrite
-    // carried segments it is reading
-    IndexManifest.requireDisjointRoot(spark, indexPath, outRoot, "IVF-PQ")
-    var cur = indexPath
-    deletes.foreach { d =>
-      deleteFromPqIndex(spark, cur, d, idCol, s"$outRoot/deleted")
-      cur = s"$outRoot/deleted"
-    }
-    increment.foreach { inc =>
-      updatePqIndex(spark, cur, inc, idCol, vecCol, coarseCents, codebooks,
-        s"$outRoot/updated", residual)
-      cur = s"$outRoot/updated"
-    }
-    if (needsPqCompaction(spark, cur, maxSegments, maxMaskedRatio)) {
-      compactPqIndex(spark, cur, s"$outRoot/compacted")
-      cur = s"$outRoot/compacted"
-    }
-    cur
-  }
+      maxMaskedRatio: Double = 0.2): String =
+    SegmentedIndex.maintain(spark, Pq(idCol, vecCol, coarseCents, codebooks, Some(residual)),
+      indexPath, deletes, increment, outRoot, maxSegments, maxMaskedRatio)
 
   /** ONE streaming micro-batch's VECTOR-TIER ingest round — the
-    * IVF-PQ sibling of [[Retrieval.ingestIndexBatch]], on the shared
-    * [[IndexManifest.ingestRound]] engine: the batch's new vectors are
-    * encoded under the FROZEN quantizer models (the trained-model
-    * stance of every incremental path here — retrain and rebuild when
-    * drift demands it) and land as an O(batch) increment generation;
+    * IVF-PQ sibling of [[Retrieval.ingestIndexBatch]] on the shared
+    * engine: the batch's new vectors are encoded under the FROZEN
+    * quantizer models and land as an O(batch) increment generation;
     * the serve pointer flips after each commit; replayed batches heal
     * instead of double-encoding; `keepGenerations` retention bounds
-    * the footprint. Rows with a null id or vector are dropped before
-    * the empty-batch check, mirroring what [[writePqIndex]] would
-    * refuse.
+    * the footprint. Rows with a null id or vector are dropped.
     */
   def ingestPqIndexBatch(
       spark: SparkSession,
@@ -1037,29 +875,20 @@ object Similarity {
       keepGenerations: Option[Int] = None,
       snapshotPath: Option[String] = None,
       nightlyMarkerPath: Option[String] = None): Unit =
-    IndexManifest.ingestRound(spark,
-      batch.where(col(idCol).isNotNull && col(vecCol).isNotNull),
-      batchId, pointerPath, ingestRoot, "IVF-PQ",
-      (rows, cur, outRoot) => maintainPqIndex(spark, cur, None, Some(rows),
-        idCol, vecCol, coarseCents, codebooks, outRoot, residual,
-        maxSegments, maxMaskedRatio),
-      keepGenerations, snapshotPath, nightlyMarkerPath)
+    SegmentedIndex.ingest(spark, Pq(idCol, vecCol, coarseCents, codebooks, Some(residual)),
+      batch, batchId, pointerPath, ingestRoot, maxSegments, maxMaskedRatio, keepGenerations,
+      snapshotPath, nightlyMarkerPath)
 
   /** [[ingestPqIndexBatch]]'s UPSERT form — the CDC-shaped vector
     * stream where a batch row is "the current embedding of this id",
     * re-embedded or brand new: ids already live in the pointer's
     * generation are tombstoned first and every batch row then lands
-    * as the increment, encoded under the FROZEN models — so a
-    * re-embedded document's old codes stop serving in the SAME
-    * generation its new codes start (the LSM delete + re-add update
-    * path, one maintain round, one pointer flip). The sibling of
-    * [[Retrieval.ingestUpsertBatch]] on the shared engine, with the
-    * SAME refusal contract (IndexManifest.requireUpsertBatch): null
-    * ids, null vectors (a deletion in disguise — routing it through
-    * here would leave the stale embedding serving), and duplicate ids
-    * refuse loudly before any state changes. Additive-only vector
-    * streams should prefer [[ingestPqIndexBatch]], which skips the
-    * live-set semi-join.
+    * as the increment, so a re-embedded document's old codes stop
+    * serving in the SAME generation its new codes start. The refusal
+    * contract is the shared one: null ids, null vectors (a deletion in
+    * disguise) and duplicate ids refuse before any state changes.
+    * Additive-only vector streams should prefer [[ingestPqIndexBatch]],
+    * which skips the live-set semi-join.
     */
   def ingestPqUpsertBatch(
       spark: SparkSession,
@@ -1076,27 +905,10 @@ object Similarity {
       maxMaskedRatio: Double = 0.2,
       keepGenerations: Option[Int] = None,
       snapshotPath: Option[String] = None,
-      nightlyMarkerPath: Option[String] = None): Unit = {
-    val n = IndexManifest.requireUpsertBatch(batch, batchId, idCol, Some(vecCol),
-      "ingestPqUpsertBatch")
-    IndexManifest.ingestRound(spark, batch,
-      batchId, pointerPath, ingestRoot, "IVF-PQ",
-      (rows, cur, outRoot) => {
-        // persist the replaced-id split so the masked live scan runs
-        // ONCE (the emptiness probe and deleteFromPqIndex's own guard
-        // read both hit the cached result)
-        val replaced = rows.select(col(idCol))
-          .join(readPqIndex(spark, cur).select(col("neighbor_id").as(idCol)),
-            Seq(idCol), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val deletes = if (replaced.count() == 0L) None else Some(replaced)
-          maintainPqIndex(spark, cur, deletes, Some(rows), idCol, vecCol,
-            coarseCents, codebooks, outRoot, residual, maxSegments, maxMaskedRatio)
-        } finally replaced.unpersist()
-      },
-      keepGenerations, snapshotPath, nightlyMarkerPath, Some(n))
-  }
+      nightlyMarkerPath: Option[String] = None): Unit =
+    SegmentedIndex.ingestUpsert(spark, Pq(idCol, vecCol, coarseCents, codebooks, Some(residual)),
+      batch, batchId, pointerPath, ingestRoot, maxSegments, maxMaskedRatio, keepGenerations,
+      snapshotPath, nightlyMarkerPath)
 
   /** The canonical per-vector payload fingerprint under an index's
     * FROZEN models: xxhash64 over (codes, c_norm) — exactly the two

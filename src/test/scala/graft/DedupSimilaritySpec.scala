@@ -942,6 +942,8 @@ class DedupSimilaritySpec extends SparkTestBase {
       spark, s"$root/g1", Seq(999999L).toDF("vec_id"), "vec_id", scratch))
     assertThrows[IllegalArgumentException](Similarity.deleteFromPqIndex(
       spark, s"$root/g1", Seq(3L).toDF("vec_id"), "vec_id", scratch))
+    assertThrows[IllegalArgumentException](Similarity.deleteFromPqIndex(
+      spark, s"$root/g1", Seq(Some(5L), None).toDF("vec_id"), "vec_id", scratch))
     // re-embed the deleted vector 3 via updatePqIndex (the guard checks
     // the LIVE set): the sequenced tombstone masks only the old row
     Similarity.updatePqIndex(spark, s"$root/g1", emb.where(col("vec_id") === 3L),

@@ -230,6 +230,8 @@ class RetrievalSpec extends SparkTestBase {
       Retrieval.deleteFromIndex(spark, dDel, Seq(99L).toDF("doc_id"), "doc_id", scratch))
     assertThrows[IllegalArgumentException](
       Retrieval.deleteFromIndex(spark, dDel, Seq(1L).toDF("doc_id"), "doc_id", scratch))
+    assertThrows[IllegalArgumentException](Retrieval.deleteFromIndex(
+      spark, dDel, Seq(Some(2L), None).toDF("doc_id"), "doc_id", scratch))
     // the per-document UPDATE path: re-add deleted doc 1 with NEW text;
     // the sequenced tombstone must mask only the OLD segment's rows
     val newDoc1 = Seq((1L, "rare gamma gamma zeta")).toDF("doc_id", "text")

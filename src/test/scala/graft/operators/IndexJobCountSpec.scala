@@ -20,6 +20,14 @@ class IndexJobCountSpec extends SparkTestBase {
       .toDF("doc_id", "text")
   private def sideRows(ids: Seq[Long], tag: String) =
     ids.map(i => (i, s"$tag-$i")).toDF("doc_id", "payload")
+  private def vecs(ids: Seq[Long], shift: Float) =
+    ids.map(i => (i, Array.tabulate(8)(d => i * 0.1f + d + shift))).toDF("doc_id", "embedding")
+  // the frozen quantizer models, trained once outside every counted block
+  private lazy val (coarse, codebooks) = {
+    val base = vecs(1L to 60L, 0f)
+    (Similarity.trainCentroids(base, "doc_id", "embedding", 4),
+      Similarity.trainProductCodebooks(base, "doc_id", "embedding", numSub = 4, nCentroids = 8))
+  }
 
   // one upsert batch: 3 live ids replaced, 7 new ids
   private def batchIds(round: Int): Seq[Long] =
@@ -80,6 +88,12 @@ class IndexJobCountSpec extends SparkTestBase {
       r.toLong, ptr, gen, "doc_id", "t"),
     path => SideIndex.build(sideRows(1L to 60L, "base"), "doc_id", "t", path))
 
+  private def pqRound(warm: Int): Int = upsertRoundJobs(warm,
+    (r, ptr, gen) => Similarity.ingestPqUpsertBatch(spark, vecs(batchIds(r), r + 1f),
+      r.toLong, ptr, gen, "doc_id", "embedding", coarse, codebooks),
+    path => Similarity.writePqIndex(vecs(1L to 60L, 0f), "doc_id", "embedding", coarse,
+      codebooks, path))
+
   test("a BM25 upsert round stays within its job budget at 1 and 3 carried segments") {
     val (one, three) = (bm25Round(0), bm25Round(2))
     info(s"BM25 upsert round jobs: $one at 1 segment, $three at 3")
@@ -94,9 +108,18 @@ class IndexJobCountSpec extends SparkTestBase {
     assert(three <= SideAt3, s"$three jobs at 3 carried segments (budget $SideAt3)")
   }
 
+  test("an IVF-PQ upsert round stays within its job budget at 1 and 3 carried segments") {
+    val (one, three) = (pqRound(0), pqRound(2))
+    info(s"IVF-PQ upsert round jobs: $one at 1 segment, $three at 3")
+    assert(one <= PqAt1, s"$one jobs at 1 carried segment (budget $PqAt1)")
+    assert(three <= PqAt3, s"$three jobs at 3 carried segments (budget $PqAt3)")
+  }
+
   // the counts measured with this layout, AQE on, local[4]
   private val Bm25At1 = 36
   private val Bm25At3 = 42
   private val SideAt1 = 32
   private val SideAt3 = 36
+  private val PqAt1 = 29
+  private val PqAt3 = 33
 }
