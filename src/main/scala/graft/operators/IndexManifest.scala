@@ -102,12 +102,6 @@ private[operators] object IndexManifest {
     else Some(cachedRel(h, s"ts/$idCol")(
       tombstoneRel(spark, h.tombstones, idCol).get))
 
-  /** [[Handle]]-memoized union of the per-tombstone `tsstats` one-row
-    * tables (the delete-time mass each generation removed).
-    */
-  def tsStats(spark: SparkSession, h: Handle): org.apache.spark.sql.DataFrame =
-    cachedRel(h, "tsstats")(readDirs(spark, h.tombstones.map(t => s"$t/tsstats")))
-
   /** Generic [[Handle]]-memoized relation for tier-specific assembled
     * reads (e.g. the PQ tier's masked vector union) — same contract as
     * the named helpers above: `mk` must assemble purely from the
@@ -212,13 +206,13 @@ private[operators] object IndexManifest {
   /** Memoized reads of published index directories, one level under
     * the [[Handle]] memo. Segment, tombstone, `stats` and `tsstats`
     * directories never change once a manifest lists them, yet every
-    * new generation is a new Handle with an empty memo, and a
-    * schema-less `spark.read.parquet` runs a schema-inference job — so
-    * without this each maintenance step re-reads (one job per
-    * directory) what the step before it read. Same rules as the handle
-    * cache: keyed per (session, qualified directories), valid while
-    * the recursive listing fingerprint (name:length:mtime) of every
-    * directory is unchanged — a directory deleted and rewritten in
+    * new generation is a new Handle with an empty memo, and building a
+    * read costs a listing plus a footer read on the driver
+    * ([[readParquet]]) — so without this each maintenance step would
+    * pay again, per directory, what the step before it paid. Same rules
+    * as the handle cache: keyed per (session, qualified directories),
+    * valid while the recursive listing fingerprint (name:length:mtime)
+    * of every directory is unchanged — a directory deleted and rewritten in
     * place gets fresh part-file UUIDs, so the replay of a half-written
     * batch root never sees a stale read — and LRU-bounded by
     * [[handleCacheCap]]. A directory that does not exist is read
@@ -259,15 +253,72 @@ private[operators] object IndexManifest {
         }
     }
 
-  /** `spark.read.parquet(dirs: _*)`, memoized per directory
-    * fingerprint (see [[dirMemo]]). Every read of an index directory in
-    * the three families goes through here.
+  /** [[readParquet]], memoized per directory fingerprint (see
+    * [[dirMemo]]). Every read of an index directory in the three
+    * families goes through here.
     */
   def readDirs(spark: SparkSession, dirs: Seq[String]): org.apache.spark.sql.DataFrame =
-    memoDirs(spark, "read", dirs)(spark.read.parquet(dirs: _*))
+    memoDirs(spark, "read", dirs)(readParquet(spark, dirs))
 
   def readDir(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     readDirs(spark, Seq(dir))
+
+  /** `spark.read.parquet(dirs: _*)` without its schema-inference job.
+    * Spark infers a parquet schema by reading one data file's footer in
+    * a one-task job; this reads one footer on the driver — the first
+    * data file listed under the first directory that has one — and
+    * hands its Spark row-metadata schema to the reader. Every file of
+    * an index table is written by one job with one schema.
+    * Partition columns (IVF-PQ's `cell`) are still discovered from the
+    * listing. A directory with no data file, a footer without Spark
+    * metadata, or a footer that does not read falls back to the plain
+    * read, so it fails (or infers) exactly as before.
+    */
+  private def readParquet(
+      spark: SparkSession, dirs: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val schema = dirs.iterator
+      .flatMap(d => dataFiles(spark, d).headOption).nextOption()
+      .flatMap(f => scala.util.Try(footer(spark, f)).toOption)
+      .flatMap(m => Option(m.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")))
+      .flatMap(js => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(js)).toOption)
+      .collect { case s: org.apache.spark.sql.types.StructType => s }
+    schema.fold(spark.read.parquet(dirs: _*))(s => spark.read.schema(s).parquet(dirs: _*))
+  }
+
+  /** The parquet data files under `dir`, partition directories
+    * included, by Spark's listing rule: hidden (`.`) names, metadata
+    * (`_`) names that are not partition directories, and in-flight
+    * copies are not data. A missing directory has none.
+    */
+  private def dataFiles(spark: SparkSession, dir: String): Seq[org.apache.hadoop.fs.Path] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def data(n: String) = !n.startsWith(".") && !(n.startsWith("_") && !n.contains("=")) &&
+      !n.endsWith("._COPYING_")
+    def walk(q: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+      fs.listStatus(q).toSeq.filter(st => data(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) walk(st.getPath) else Seq(st.getPath)
+      }
+    if (fs.exists(p)) walk(p) else Seq.empty
+  }
+
+  private def footer(spark: SparkSession,
+      file: org.apache.hadoop.fs.Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        file, spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  /** The rows of the parquet table at `dir`, summed from its data
+    * files' footers on the driver — what `count()` of the table
+    * returns, without a job.
+    */
+  def footerRowCount(spark: SparkSession, dir: String): Long = {
+    import scala.jdk.CollectionConverters._
+    dataFiles(spark, dir).map(f => footer(spark, f).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
 
   /** Per-column sums over the small one-row metadata tables at `dirs`
     * (`stats`, `tsstats`) — nulls skipped, and no rows sums to 0, as
@@ -292,20 +343,15 @@ private[operators] object IndexManifest {
   private def smallTableRows(spark: SparkSession, dir: String): Seq[Map[String, Long]] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    // Spark's data-file rule: hidden (`.`) and metadata (`_`) names are not data
-    val files = if (!fs.exists(p)) Seq.empty else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith(".") &&
-        !st.getPath.getName.startsWith("_"))
+    val files = dataFiles(spark, dir)
     if (files.isEmpty)
       readDir(spark, dir).collect().toSeq.map(r => r.schema.fieldNames.zip(r.toSeq).collect {
         case (n, v: java.lang.Long) => n -> v.longValue
         case (n, v: java.lang.Integer) => n -> v.longValue
       }.toMap)
-    else files.flatMap { st =>
+    else files.flatMap { f =>
       val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport, st.getPath)
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport, f)
         .withConf(conf).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
         val t = g.getType
@@ -324,8 +370,10 @@ private[operators] object IndexManifest {
   }
 
   /** A one-row LOCAL DataFrame of non-null Int / Long / String values
-    * — the shape of every family's info surface. Local, so polling it
-    * (`head()`) plans no aggregate and launches no job.
+    * — the shape of every family's info surface, and of the one-row
+    * `stats` / `tsstats` a step writes from counts it already holds.
+    * Local, so polling it (`head()`) plans no aggregate and launches no
+    * job.
     */
   def infoRow(spark: SparkSession, cols: (String, Any)*): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types._
@@ -400,7 +448,7 @@ private[operators] object IndexManifest {
       }
       cached.v
     }.getOrElse {
-      val row = spark.read.parquet(s"$path/manifest").head()
+      val row = readParquet(spark, Seq(s"$path/manifest")).head()
       def seqCol(name: String): Seq[String] =
         if (!row.schema.fieldNames.contains(name)) Seq.empty
         else row.getSeq[String](row.fieldIndex(name))
@@ -448,11 +496,12 @@ private[operators] object IndexManifest {
     * the same way: a delete is a new tombstone dir + a manifest
     * listing it, never a data rewrite (the LSM delete stance); readers
     * subtract the union of listed tombstone ids, and compaction is
-    * what applies them physically.
+    * what applies them physically. Returns the published generation's
+    * [[Handle]], so a step that builds on it need not load it back.
     */
   def write(
       spark: SparkSession, path: String, version: Int = 1, flavor: String = "",
-      segments: Seq[String] = Seq.empty, tombstones: Seq[String] = Seq.empty): Unit = {
+      segments: Seq[String] = Seq.empty, tombstones: Seq[String] = Seq.empty): Handle = {
     spark.range(1).select(
         lit(version).as("format_version"), lit(flavor).as("flavor"),
         typedLit(segments).as("segments"),
@@ -470,6 +519,7 @@ private[operators] object IndexManifest {
       catch { case _: IllegalArgumentException => false })
     if (loadable) handleCache.put(cacheKey(spark, path), fp.get, h)
     else invalidate(spark, path)
+    h
   }
 
   /** The manifest's segment list resolved to full paths: relative

@@ -236,9 +236,10 @@ object Retrieval {
 
     // the deleted ids' rows of the LIVE doclen: earlier tombstones
     // already masked their rows, so the generations' masses add
-    // without overlap across delete/re-add/delete cycles
-    override def tombstoneMass(
-        spark: SparkSession, h: IndexManifest.Handle, ids: DataFrame): DataFrame =
+    // without overlap across delete/re-add/delete cycles. total_len
+    // needs the rows, so a known id count saves nothing here
+    override def tombstoneMass(spark: SparkSession, h: IndexManifest.Handle, ids: DataFrame,
+        n: Option[Long]): DataFrame =
       liveDoclen(spark, h).join(ids, Seq(idCol), "left_semi")
         .agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
 
@@ -739,9 +740,13 @@ object Retrieval {
     * df restricted to the query terms BEFORE broadcasting and SUMMED
     * across segments, minus the sequenced-mask posting counts (derived
     * from the same term-pruned scan — a pruned re-scan, never a
-    * vocabulary pass); stats add across segments minus the delete-time
-    * tsstats rows (negated union — no corpus doclen scan at serve
-    * time). The no-deletes plan carries zero extra operators.
+    * vocabulary pass); stats are the segments' `stats` sums minus the
+    * delete-time `tsstats` sums, read on the driver
+    * ([[SegmentedIndex.masses]] — no job, no corpus doclen scan) into a
+    * one-row local relation memoized on the Handle. A relation, not
+    * literals: a literal constant compiles into the generated code, so
+    * every new generation would compile new classes. The no-deletes
+    * plan carries zero extra operators.
     */
   private def liveTermStats(
       spark: SparkSession, h: IndexManifest.Handle,
@@ -749,10 +754,13 @@ object Retrieval {
     val dfSummed = IndexManifest.segTable(spark, h, "termdf")
       .where(col("term").isin(terms: _*))
       .groupBy("term").agg(sum("df").as("df"))
-    val statSummed = IndexManifest.segTable(spark, h, "stats")
-      .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total_len"))
+    val stats = IndexManifest.memo(spark, h, "live-stats") {
+      val (indexed, masked) = SegmentedIndex.masses(spark, Bm25(), h)
+      IndexManifest.infoRow(spark, Bm25().statCols.zip(indexed.zip(masked))
+        .map { case (c, (i, m)) => c -> (i - m) }: _*)
+    }
     IndexManifest.tombstoneRel(spark, h, idCol) match {
-      case None => (dfSummed, statSummed)
+      case None => (dfSummed, stats)
       case Some(ts) =>
         val prunedOrd = IndexManifest.segTableOrd(spark, h, "postings")
           .where(col("term").isin(terms: _*))
@@ -761,11 +769,7 @@ object Retrieval {
           .groupBy("term").agg(count(lit(1)).as("df_del"))
         val dfLive = dfSummed.join(dfDel, Seq("term"), "left_outer")
           .select(col("term"), (col("df") - coalesce(col("df_del"), lit(0L))).as("df"))
-        val statLive = IndexManifest.segTable(spark, h, "stats")
-          .unionByName(IndexManifest.tsStats(spark, h)
-            .select((-col("n_docs")).as("n_docs"), (-col("total_len")).as("total_len")))
-          .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total_len"))
-        (dfLive, statLive)
+        (dfLive, stats)
     }
   }
 

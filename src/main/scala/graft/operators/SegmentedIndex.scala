@@ -88,14 +88,26 @@ private[operators] object SegmentedIndex {
       */
     def incrementIds(increment: DataFrame): DataFrame
 
-    /** The one-row `tsstats` of a delete of `ids` (live ids of `h`). */
-    def tombstoneMass(spark: SparkSession, h: IndexManifest.Handle, ids: DataFrame): DataFrame =
-      ids.agg(count(lit(1)).as(statCols.head))
-
-    /** Refuses a batch the family cannot index — on build (`base` None)
-      * and update (`base` the index at `path`).
+    /** The one-row `tsstats` of a delete of `ids` (live ids of `h`);
+      * `n` is the number of ids when the caller has already counted
+      * them, so the row count needs no query.
       */
-    def checkBatch(batch: DataFrame, path: String, base: Option[IndexManifest.Handle]): Unit = ()
+    def tombstoneMass(spark: SparkSession, h: IndexManifest.Handle, ids: DataFrame,
+        n: Option[Long]): DataFrame =
+      n.fold(ids.agg(count(lit(1)).as(statCols.head)))(c =>
+        IndexManifest.infoRow(spark, statCols.head -> c))
+
+    /** Refuses a batch whose shape the family cannot index, from driver
+      * metadata only — on build (`base` None) and update (`base` the
+      * index at `path`).
+      */
+    def checkSchema(batch: DataFrame, path: String, base: Option[IndexManifest.Handle]): Unit = ()
+
+    /** [[checkSchema]] plus whatever check the family runs over the
+      * batch's rows.
+      */
+    def checkBatch(batch: DataFrame, path: String, base: Option[IndexManifest.Handle]): Unit =
+      checkSchema(batch, path, base)
   }
 
   /** The loaded handle of the index at `path`: present, at
@@ -112,18 +124,20 @@ private[operators] object SegmentedIndex {
   }
 
   /** The one-row `stats` beside `segPath/table`: its row count as
-    * `statCol`, counted from the just-written parquet (footers, no
-    * payload bytes).
+    * `statCol`, summed from the just-written files' footers on the
+    * driver and written from a local row — no job reads the table back.
     */
   def writeCountStats(spark: SparkSession, segPath: String, table: String, statCol: String): Unit =
-    IndexManifest.readDir(spark, s"$segPath/$table")
-      .agg(count(lit(1)).as(statCol))
+    IndexManifest.infoRow(spark,
+        statCol -> IndexManifest.footerRowCount(spark, s"$segPath/$table"))
       .write.mode("overwrite").parquet(s"$segPath/stats")
 
-  /** Clear `outPath`'s manifest, write the data, then the manifest. */
+  /** Clear `outPath`'s manifest, write the data, then the manifest;
+    * returns the published generation.
+    */
   private def publish(
       spark: SparkSession, outPath: String, flavor: String,
-      segments: Seq[String], tombstones: Seq[String])(writeData: => Unit): Unit = {
+      segments: Seq[String], tombstones: Seq[String])(writeData: => Unit): IndexManifest.Handle = {
     IndexManifest.clear(spark, outPath)
     writeData
     IndexManifest.write(spark, outPath, version = FormatVersion, flavor = flavor,
@@ -141,7 +155,7 @@ private[operators] object SegmentedIndex {
     val seg = "segments/seg-00000"
     publish(batch.sparkSession, path, f.flavor.getOrElse(""), Seq(seg), Nil) {
       f.writeSegment(batch, s"$path/$seg")
-    }
+    }: Unit
   }
 
   /** Merge an increment of NEW ids, publishing at `outPath`: the base
@@ -160,6 +174,15 @@ private[operators] object SegmentedIndex {
     require(resubmitted == 0L,
       s"${f.what} update: $resubmitted increment ids already live at $path — increments " +
         "must contain NEW ids only (to change an indexed row, delete it first, then update)")
+    appendSegment(spark, f, h, increment, outPath): Unit
+  }
+
+  /** The update step, unguarded: `h`'s segments and tombstones carried
+    * by reference plus `increment` as one new segment, published at
+    * `outPath`.
+    */
+  private def appendSegment(spark: SparkSession, f: Family, h: IndexManifest.Handle,
+      increment: DataFrame, outPath: String): IndexManifest.Handle = {
     val seg = s"segments/${IndexManifest.nextSegmentName(h.segments)}"
     publish(spark, outPath, h.flavor, IndexManifest.qualify(spark, h.segments) :+ seg,
       IndexManifest.qualify(spark, h.tombstones)) {
@@ -180,9 +203,7 @@ private[operators] object SegmentedIndex {
     fresh(f, "delete", path, outPath)
     val h = open(spark, f, path)
     val id = f.indexIdCol
-    val ids = deletes.select(col(f.idCol).as(id)).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    appendTombstone(spark, f, h, deletes, None, outPath) { ids =>
       // one job for both refusals: a null id never matches a live id,
       // so it lands in the anti-join beside the not-live ones
       val notLive = ids.join(f.liveIds(spark, h), Seq(id), "left_anti")
@@ -193,12 +214,27 @@ private[operators] object SegmentedIndex {
       require(notLive.getLong(1) == 0L,
         s"${f.what} delete: ${notLive.getLong(1)} ids are not live at $path — every delete " +
           "must name a currently-indexed, not-already-deleted row")
+    }: Unit
+  }
+
+  /** The delete step: `deletes`' distinct ids (`n` of them, when the
+    * caller counted them) as a new tombstone generation over `h`,
+    * published at `outPath`. `guard` sees the ids first and refuses by
+    * throwing; the step itself checks nothing.
+    */
+  private def appendTombstone(spark: SparkSession, f: Family, h: IndexManifest.Handle,
+      deletes: DataFrame, n: Option[Long], outPath: String)(
+      guard: DataFrame => Unit): IndexManifest.Handle = {
+    val ids = deletes.select(col(f.idCol).as(f.indexIdCol)).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      guard(ids)
       val ts = s"tombstones/${IndexManifest.nextTombstoneName(h.tombstones)}"
       publish(spark, outPath, h.flavor, IndexManifest.qualify(spark, h.segments),
         IndexManifest.qualify(spark, h.tombstones) :+ ts) {
         ids.withColumn("up_to", lit(h.segments.size))
           .write.mode("overwrite").parquet(s"$outPath/$ts/ids")
-        f.tombstoneMass(spark, h, ids).write.mode("overwrite").parquet(s"$outPath/$ts/tsstats")
+        f.tombstoneMass(spark, h, ids, n).write.mode("overwrite").parquet(s"$outPath/$ts/tsstats")
       }
     } finally ids.unpersist()
   }
@@ -211,8 +247,16 @@ private[operators] object SegmentedIndex {
     fresh(f, "compact", path, outPath)
     val h = open(spark, f, path)
     val seg = "segments/seg-00000"
-    publish(spark, outPath, h.flavor, Seq(seg), Nil)(f.rehome(spark, h, s"$outPath/$seg"))
+    publish(spark, outPath, h.flavor, Seq(seg), Nil)(f.rehome(spark, h, s"$outPath/$seg")): Unit
   }
+
+  /** The `statCols` sums of `h`: indexed (over the segments' `stats`)
+    * and masked (over the tombstones' `tsstats`), read on the driver.
+    */
+  private[operators] def masses(
+      spark: SparkSession, f: Family, h: IndexManifest.Handle): (Seq[Long], Seq[Long]) =
+    (IndexManifest.sumOneRowTables(spark, h.segments.map(s => s"$s/stats"), f.statCols),
+      IndexManifest.sumOneRowTables(spark, h.tombstones.map(t => s"$t/tsstats"), f.statCols))
 
   /** The one-row operational summary: (n_segments, n_tombstone_gens,
     * [flavor,] n_<stem>_indexed, n_<stem>_masked, n_<stem>_live
@@ -222,10 +266,7 @@ private[operators] object SegmentedIndex {
     */
   def info(spark: SparkSession, f: Family, path: String): DataFrame = {
     val h = open(spark, f, path)
-    val indexed = IndexManifest.sumOneRowTables(
-      spark, h.segments.map(s => s"$s/stats"), f.statCols)
-    val masked = IndexManifest.sumOneRowTables(
-      spark, h.tombstones.map(t => s"$t/tsstats"), f.statCols)
+    val (indexed, masked) = masses(spark, f, h)
     val n = s"n_${f.stem}"
     IndexManifest.infoRow(spark,
       Seq("n_segments" -> h.segments.size, "n_tombstone_gens" -> h.tombstones.size) ++
@@ -240,17 +281,32 @@ private[operators] object SegmentedIndex {
     * `maxSegments` (every live read unions one more scan per segment)
     * or the tombstone-masked share of indexed rows passes
     * `maxMaskedRatio` (masked rows still occupy disk and flow through
-    * the serve mask until compaction). Metadata-only, like [[info]].
+    * the serve mask until compaction). Metadata-only, like [[info]],
+    * and compared on the driver: no query is planned.
     */
   def needsCompaction(spark: SparkSession, f: Family, path: String,
+      maxSegments: Int, maxMaskedRatio: Double): Boolean =
+    due(spark, f, open(spark, f, path), maxSegments, maxMaskedRatio)
+
+  private def due(spark: SparkSession, f: Family, h: IndexManifest.Handle,
       maxSegments: Int, maxMaskedRatio: Double): Boolean = {
     require(maxSegments >= 1 && maxMaskedRatio >= 0.0,
       s"needsCompaction: bad thresholds ($maxSegments, $maxMaskedRatio)")
-    val r = info(spark, f, path).head()
-    val indexed = r.getAs[Long](s"n_${f.stem}_indexed")
-    r.getAs[Int]("n_segments") > maxSegments ||
-      (indexed > 0L && r.getAs[Long](s"n_${f.stem}_masked").toDouble / indexed > maxMaskedRatio)
+    val (indexed, masked) = masses(spark, f, h)
+    h.segments.size > maxSegments ||
+      (indexed.head > 0L && masked.head.toDouble / indexed.head > maxMaskedRatio)
   }
+
+  /** [[compact]] `cur` (whose generation is `h`) into `outRoot/compacted`
+    * when the policy trips; returns the root to serve.
+    */
+  private def compactIfDue(spark: SparkSession, f: Family, cur: String, h: IndexManifest.Handle,
+      outRoot: String, maxSegments: Int, maxMaskedRatio: Double): String =
+    if (!due(spark, f, h, maxSegments, maxMaskedRatio)) cur
+    else {
+      compact(spark, f, cur, s"$outRoot/compacted")
+      s"$outRoot/compacted"
+    }
 
   /** ONE maintenance round: this round's deletes (if any), then its
     * increment (if any), then [[compact]] if the policy trips. Returns
@@ -274,11 +330,7 @@ private[operators] object SegmentedIndex {
       update(spark, f, cur, inc, s"$outRoot/updated")
       cur = s"$outRoot/updated"
     }
-    if (needsCompaction(spark, f, cur, maxSegments, maxMaskedRatio)) {
-      compact(spark, f, cur, s"$outRoot/compacted")
-      cur = s"$outRoot/compacted"
-    }
-    cur
+    compactIfDue(spark, f, cur, open(spark, f, cur), outRoot, maxSegments, maxMaskedRatio)
   }
 
   /** ONE streaming micro-batch's additive ingest round on the
@@ -304,11 +356,23 @@ private[operators] object SegmentedIndex {
     * is "the current version of this id": ids already live in the
     * pointer's generation are tombstoned first and every batch row then
     * lands as the increment, so a replaced row's old version stops
-    * serving in the SAME generation its new one starts. The batch is
-    * validated before any state changes
-    * ([[IndexManifest.requireUpsertBatch]]: null ids, null payloads,
-    * duplicate ids refuse). Additive-only streams should prefer
-    * [[ingest]], which skips the live-set semi-join.
+    * serving in the SAME generation its new one starts. Additive-only
+    * streams should prefer [[ingest]], which skips the live-set
+    * semi-join.
+    *
+    * The round is [[maintain]]'s delete, update and compaction over
+    * ONE opened generation `h`, and it runs the delete and update STEPS
+    * without their guards, because every fact those guards re-prove is
+    * already established once:
+    *  - batch ids are non-null and distinct (and payloads non-null):
+    *    [[IndexManifest.requireUpsertBatch]], before any state changes;
+    *  - the replaced ids are live in `h`: they are the batch's
+    *    semi-join against `h`'s live ids, persisted and counted once;
+    *  - no batch id is live after the delete: the new tombstone
+    *    generation's `up_to` is `h`'s segment count, so it masks every
+    *    replaced id in every segment of `h`.
+    * What still runs: the flavor check in [[open]] and the family's
+    * [[Family.checkSchema]] (driver metadata), both before any write.
     */
   def ingestUpsert(spark: SparkSession, f: Family, batch: DataFrame, batchId: Long,
       pointerPath: String, ingestRoot: String, maxSegments: Int, maxMaskedRatio: Double,
@@ -318,15 +382,24 @@ private[operators] object SegmentedIndex {
       s"${f.what} upsert")
     IndexManifest.ingestRound(spark, batch, batchId, pointerPath, ingestRoot, f.what,
       (rows, cur, outRoot) => {
+        IndexManifest.requireDisjointRoot(spark, cur, outRoot, f.what)
+        val h = open(spark, f, cur)
+        f.checkSchema(rows, cur, Some(h))
         // persist the replaced-id split so the live scan runs ONCE: the
-        // emptiness probe and the delete's own reads hit the cache
+        // emptiness probe and the delete step's reads hit the cache
         val replaced = rows.select(col(f.idCol))
-          .join(f.liveIds(spark, open(spark, f, cur)).select(col(f.indexIdCol).as(f.idCol)),
+          .join(f.liveIds(spark, h).select(col(f.indexIdCol).as(f.idCol)),
             Seq(f.idCol), "left_semi")
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val deletes = if (replaced.count() == 0L) None else Some(replaced)
-          maintain(spark, f, cur, deletes, Some(rows), outRoot, maxSegments, maxMaskedRatio)
+          val nReplaced = replaced.count()
+          val base =
+            if (nReplaced == 0L) h
+            else appendTombstone(spark, f, h, replaced, Some(nReplaced),
+              s"$outRoot/deleted")(_ => ())
+          val updated = appendSegment(spark, f, base, rows, s"$outRoot/updated")
+          compactIfDue(spark, f, s"$outRoot/updated", updated, outRoot, maxSegments,
+            maxMaskedRatio)
         } finally replaced.unpersist()
       },
       keepGenerations, snapshotPath, nightlyMarkerPath, Some(n))

@@ -81,7 +81,7 @@ object SideIndex {
     // DataType equality: parquet reads arrays back with containsNull =
     // true while a memory-built increment may say false, and that
     // nullability variance unions fine
-    override def checkBatch(
+    override def checkSchema(
         rows: DataFrame, path: String, base: Option[IndexManifest.Handle]): Unit = {
       require(rows.columns.contains(idCol), s"$what: no '$idCol' column")
       base.foreach { h =>
@@ -93,9 +93,14 @@ object SideIndex {
           s"$what: increment schema ${rows.schema.simpleString} does not match the " +
             s"index's rows schema ${baseSchema.simpleString} at $path")
       }
-      // one bounded pass: a null-keyed row could never be deleted or
-      // re-keyed, and two live rows for one key would serve silently
-      // and break the stats arithmetic
+    }
+
+    // one bounded pass: a null-keyed row could never be deleted or
+    // re-keyed, and two live rows for one key would serve silently
+    // and break the stats arithmetic
+    override def checkBatch(
+        rows: DataFrame, path: String, base: Option[IndexManifest.Handle]): Unit = {
+      checkSchema(rows, path, base)
       val c = rows.agg(
         count(lit(1)).as("n"),
         count(col(idCol)).as("nn"),

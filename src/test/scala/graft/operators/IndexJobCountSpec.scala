@@ -53,6 +53,62 @@ class IndexJobCountSpec extends SparkTestBase {
     assert(jobs(spark)(SideIndex.needsCompaction(spark, s"$root/side-del", "t")) == 0)
   }
 
+  test("the first read of a freshly written segment, tombstone and stats directory launches no job") {
+    val root = tmp("jobs-first-read")
+    Retrieval.buildIndex(docs(1L to 40L, "base"), "doc_id", "text", s"$root/bm25")
+    Similarity.writePqIndex(vecs(1L to 40L, 0f), "doc_id", "embedding", coarse, codebooks,
+      s"$root/pq")
+    SideIndex.build(sideRows(1L to 40L, "base"), "doc_id", "t", s"$root/side")
+    def seg(path: String) = IndexManifest.handle(spark, path).segments.head
+    val segDirs =
+      Seq("postings", "termdf", "stats", "doclen").map(t => s"${seg(s"$root/bm25")}/$t") ++
+      Seq(s"${seg(s"$root/pq")}/vectors", s"${seg(s"$root/pq")}/stats",
+        s"${seg(s"$root/side")}/rows", s"${seg(s"$root/side")}/stats")
+    assert(jobs(spark)(segDirs.foreach(d => IndexManifest.readDir(spark, d).columns: Unit)) == 0)
+    Retrieval.deleteFromIndex(spark, s"$root/bm25", Seq(3L).toDF("doc_id"), "doc_id",
+      s"$root/del")
+    val ts = IndexManifest.handle(spark, s"$root/del").tombstones.head
+    assert(jobs(spark) {
+      IndexManifest.readDir(spark, s"$ts/ids").columns: Unit
+      IndexManifest.readDir(spark, s"$ts/tsstats").columns: Unit
+    } == 0)
+  }
+
+  test("readDir's driver-read schema equals Spark's inferred schema for every index table") {
+    val root = tmp("jobs-schema")
+    Retrieval.buildIndex(docs(1L to 40L, "base"), "doc_id", "text", s"$root/bm25")
+    Retrieval.deleteFromIndex(spark, s"$root/bm25", Seq(3L).toDF("doc_id"), "doc_id",
+      s"$root/del")
+    Similarity.writePqIndex(vecs(1L to 40L, 0f), "doc_id", "embedding", coarse, codebooks,
+      s"$root/pq")
+    SideIndex.build(sideRows(1L to 40L, "base"), "doc_id", "t", s"$root/side")
+    val h = IndexManifest.handle(spark, s"$root/del")
+    def seg(path: String) = IndexManifest.handle(spark, path).segments.head
+    val dirs = Seq("postings", "termdf", "stats", "doclen").map(t => s"${h.segments.head}/$t") ++
+      Seq(s"${seg(s"$root/pq")}/vectors", s"${seg(s"$root/side")}/rows",
+        s"${h.tombstones.head}/ids", s"${h.tombstones.head}/tsstats", s"$root/del/manifest")
+    // a footer without Spark's row metadata (written by parquet-hadoop
+    // alone) takes the fallback: Spark's own inference, in a job
+    val plain = s"$root/plain"
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary name (UTF8); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$plain/part-0.parquet"),
+        spark.sparkContext.hadoopConfiguration))
+      .withType(schema).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("id", 1L).append("name", "a"))
+    finally w.close()
+    assert(jobs(spark)(IndexManifest.readDir(spark, plain).columns) > 0,
+      "a footer without Spark metadata should fall back to Spark's inference")
+    (dirs :+ plain).foreach { d =>
+      assert(IndexManifest.readDir(spark, d).schema == spark.read.parquet(d).schema, d)
+    }
+    assert(dirs.forall(d => IndexManifest.readDir(spark, d).schema.nonEmpty))
+    assert(IndexManifest.readDir(spark, s"${seg(s"$root/pq")}/vectors").columns.last == "cell")
+  }
+
   test("handle() right after a family publishes launches no job") {
     val root = tmp("jobs-onwrite")
     Retrieval.buildIndex(docs(1L to 40L, "base"), "doc_id", "text", s"$root/base")
@@ -116,10 +172,10 @@ class IndexJobCountSpec extends SparkTestBase {
   }
 
   // the counts measured with this layout, AQE on, local[4]
-  private val Bm25At1 = 36
-  private val Bm25At3 = 42
-  private val SideAt1 = 32
-  private val SideAt3 = 36
-  private val PqAt1 = 29
-  private val PqAt3 = 33
+  private val Bm25At1 = 25
+  private val Bm25At3 = 29
+  private val SideAt1 = 15
+  private val SideAt3 = 17
+  private val PqAt1 = 15
+  private val PqAt3 = 17
 }

@@ -1,0 +1,158 @@
+package graft.operators
+
+import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The facts an upsert round establishes once instead of re-proving
+  * through the delete and update guards: after every round of a
+  * delete / re-add / delete chain, the published generation serves
+  * each id at most once, every replaced id's old version is masked,
+  * and the live set equals the model. Checked per family, plus the
+  * refusals the round still runs before any write.
+  */
+class UpsertFactsSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** One family under test: `rows` turns (id, version) pairs into the
+    * family's input relation; `served` is the live (id, fingerprint)
+    * relation of a published index, `want` the same relation computed
+    * directly from input rows.
+    */
+  private final case class Fam(
+      name: String,
+      rows: Seq[(Long, Int)] => DataFrame,
+      build: (DataFrame, String) => Unit,
+      upsert: (DataFrame, Long, String, String, Double) => Unit,
+      delete: (String, DataFrame, String) => Unit,
+      served: String => DataFrame,
+      want: DataFrame => DataFrame,
+      nLive: String => Long)
+
+  private def fingerprints(df: DataFrame): Seq[(Long, String)] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.getString(1)))
+
+  // id 7: replaced in round 0, deleted, re-added in round 1, replaced
+  // again in round 2; id 3 replaced twice; 12 once; 101-103 arrive new.
+  // Round 2 trips the 0.15 masked-ratio policy, so the last check runs
+  // on a compacted generation
+  private def chain(f: Fam): Unit = {
+    val root = tmp(s"upsert-facts-${f.name}")
+    val ptr = s"$root/CURRENT"
+    var model: Map[Long, Int] = (1L to 30L).map(_ -> 0).toMap
+    f.build(f.rows(model.toSeq), s"$root/base")
+    ServePointer.publish(spark, ptr, s"$root/base")
+
+    def check(step: String): Unit = {
+      val cur = ServePointer.read(spark, ptr)
+      val got = fingerprints(f.served(cur))
+      val ids = got.map(_._1)
+      assert(ids.size == ids.distinct.size,
+        s"${f.name} $step: ids live twice: ${ids.diff(ids.distinct).distinct.sorted}")
+      val want = fingerprints(f.want(f.rows(model.toSeq))).toSet
+      assert(got.toSet == want,
+        s"${f.name} $step: served ${(got.toSet -- want).toSeq.sortBy(_._1)} beyond the model, " +
+          s"missing ${(want -- got.toSet).toSeq.sortBy(_._1)}")
+      assert(f.nLive(cur) == model.size.toLong, s"${f.name} $step: info live count")
+    }
+    def round(b: Long, batch: Map[Long, Int]): Unit = {
+      f.upsert(f.rows(batch.toSeq), b, ptr, s"$root/gen", 0.15)
+      model ++= batch
+      check(s"round $b")
+    }
+
+    round(0L, Map(3L -> 1, 7L -> 1, 11L -> 1, 101L -> 1, 102L -> 1))
+    f.delete(ServePointer.read(spark, ptr), Seq(7L).toDF("doc_id"), s"$root/del")
+    ServePointer.publish(spark, ptr, s"$root/del")
+    model -= 7L
+    check("delete")
+    round(1L, Map(7L -> 2, 12L -> 2, 103L -> 2))
+    round(2L, Map(7L -> 3, 3L -> 3))
+    assert(ServePointer.read(spark, ptr).endsWith("batch-2/compacted"),
+      s"${f.name}: round 2 should compact, serving ${ServePointer.read(spark, ptr)}")
+  }
+
+  private val words = Seq("spark", "join", "stream", "index", "segment", "merge", "query")
+
+  private val bm25 = Fam("bm25",
+    rows => rows.map { case (i, v) => (i, s"${words((i % 7).toInt)} v$v doc $i") }
+      .toDF("doc_id", "text"),
+    (df, path) => Retrieval.buildIndex(df, "doc_id", "text", path),
+    (df, b, ptr, gen, ratio) => Retrieval.ingestUpsertBatch(spark, df, b, ptr, gen,
+      "doc_id", "text", maxMaskedRatio = ratio),
+    (path, ids, out) => Retrieval.deleteFromIndex(spark, path, ids, "doc_id", out),
+    path => Retrieval.liveDocHashes(spark, path)
+      .select(col("doc_id"), col("content_hash").cast("string")),
+    df => df.select(col("doc_id"), Retrieval.contentHash(col("text")).cast("string")),
+    path => Retrieval.indexInfo(spark, path).head().getAs[Long]("n_docs_live"))
+
+  private val side = Fam("side",
+    rows => rows.map { case (i, v) => (i, s"v$v-$i") }.toDF("doc_id", "payload"),
+    (df, path) => SideIndex.build(df, "doc_id", "t", path),
+    (df, b, ptr, gen, ratio) => SideIndex.ingestUpsertBatch(spark, df, b, ptr, gen,
+      "doc_id", "t", maxMaskedRatio = ratio),
+    (path, ids, out) => SideIndex.delete(spark, path, ids, "doc_id", out),
+    path => SideIndex.read(spark, path, "doc_id", "t").select("doc_id", "payload"),
+    df => df,
+    path => SideIndex.info(spark, path, "t").head().getAs[Long]("n_rows_live"))
+
+  private def vecRows(rows: Seq[(Long, Int)]): DataFrame =
+    rows.map { case (i, v) => (i, Array.tabulate(8)(d => i * 0.1f + d + v)) }
+      .toDF("doc_id", "embedding")
+  // the frozen quantizer models, trained once on the base rows
+  private lazy val (coarse, codebooks) = {
+    val base = vecRows((1L to 30L).map(_ -> 0))
+    (Similarity.trainCentroids(base, "doc_id", "embedding", 4),
+      Similarity.trainProductCodebooks(base, "doc_id", "embedding", numSub = 4, nCentroids = 8))
+  }
+  private def pqFingerprint(df: DataFrame): DataFrame =
+    df.select(col("neighbor_id"),
+      concat_ws("|", col("cell").cast("string"), col("codes").cast("string"),
+        col("c_norm").cast("string")))
+
+  private val pq = Fam("pq",
+    vecRows,
+    (df, path) => Similarity.writePqIndex(df, "doc_id", "embedding", coarse, codebooks, path),
+    (df, b, ptr, gen, ratio) => Similarity.ingestPqUpsertBatch(spark, df, b, ptr, gen,
+      "doc_id", "embedding", coarse, codebooks, maxMaskedRatio = ratio),
+    (path, ids, out) => Similarity.deleteFromPqIndex(spark, path, ids, "doc_id", out),
+    path => pqFingerprint(Similarity.readPqIndex(spark, path)),
+    df => pqFingerprint(Similarity.pqIndex(df, "doc_id", "embedding", coarse, codebooks)),
+    path => Similarity.pqIndexInfo(spark, path).head().getAs[Long]("n_vecs_live"))
+
+  test("BM25 upsert rounds keep one live version per id through delete / re-add / delete") {
+    chain(bm25)
+  }
+
+  test("side-table upsert rounds keep one live version per id through delete / re-add / delete") {
+    chain(side)
+  }
+
+  test("IVF-PQ upsert rounds keep one live version per id through delete / re-add / delete") {
+    chain(pq)
+  }
+
+  test("the upsert round still refuses a drifted side schema and an IVF-PQ flavor mismatch") {
+    val root = tmp("upsert-refusals")
+    SideIndex.build(side.rows((1L to 10L).map(_ -> 0)), "doc_id", "t", s"$root/side")
+    ServePointer.publish(spark, s"$root/SIDE", s"$root/side")
+    val drift = intercept[IllegalArgumentException] {
+      SideIndex.ingestUpsertBatch(spark, Seq((3L, 1), (40L, 2)).toDF("doc_id", "payload"), 0L,
+        s"$root/SIDE", s"$root/side-gen", "doc_id", "t")
+    }
+    assert(drift.getMessage.contains("does not match"), drift.getMessage)
+    assert(ServePointer.read(spark, s"$root/SIDE").endsWith("/side"))
+
+    pq.build(vecRows((1L to 30L).map(_ -> 0)), s"$root/pq")
+    ServePointer.publish(spark, s"$root/PQ", s"$root/pq")
+    val flavor = intercept[IllegalArgumentException] {
+      Similarity.ingestPqUpsertBatch(spark, vecRows(Seq(3L -> 1, 40L -> 1)), 0L, s"$root/PQ",
+        s"$root/pq-gen", "doc_id", "embedding", coarse, codebooks, residual = true)
+    }
+    assert(flavor.getMessage.contains("flavor"), flavor.getMessage)
+    assert(ServePointer.read(spark, s"$root/PQ").endsWith("/pq"))
+  }
+}
