@@ -16,7 +16,10 @@ import graft.sources.IOOps
   * Determinism rules used throughout (so Spark and DuckDB hash-match
   * bit-for-bit):
   *  - money/double sums go through integer cents
-  *    (`sum(cast(round(x*100,0) as bigint))/100.0`) — order-independent;
+  *    (`sum(cast(round(x*100,0) as bigint))/100.0`) — order-independent.
+  *    The contract is unchanged and is still the oracle's
+  *    `CAST(round(x*100,0) AS BIGINT)`; Spark computes the same bits
+  *    without a per-row BigDecimal (see [[cents]]);
   *  - per-row double arithmetic keeps the identical op sequence on both
   *    sides (IEEE ops are deterministic given the same operand order);
   *  - every rank/limit has an explicit unique tiebreak column;
@@ -1410,8 +1413,33 @@ object SparkEntry {
         "vec_id", "embedding", didx.coarse, didx.cb, out, maxSegments = 1)
     })
 
-  /** Integer-cents of a 2-decimal double column (order-independent sums). */
-  private def cents(c: Column): Column = round(c * 100, 0).cast("long")
+  /** Integer cents of a 2-decimal double column (order-independent
+    * sums). The contract is unchanged: the result equals the oracle's
+    * `CAST(round(x*100,0) AS BIGINT)` bit for bit, on every input.
+    */
+  private[graft] def cents(c: Column): Column = halfUpLong(c * 100)
+
+  /** `round(v, 0).cast("long")` for a DOUBLE `v`, in codegen'd double
+    * and long arithmetic. Spark generates `round` on a double as
+    * `java.math.BigDecimal.valueOf(v).setScale(0, HALF_UP).doubleValue()`
+    * (`RoundBase.doGenCode`), which formats every row to a string and
+    * parses it back; this form creates no BigDecimal for |v| < 2^52.
+    *
+    * Why it is exact there: every k+0.5 is a double and `a - floor(a)`
+    * is exact, so the test `>= 0.5` is half-away-from-zero on v. The
+    * decimal string `BigDecimal.valueOf` parses round-trips to v, so it
+    * lies on the same side of every k+0.5 as v, and HALF_UP on it is
+    * half-away-from-zero on v too. NaN, ±Infinity, null and |v| >= 2^52
+    * (NaN compares above every double) take Spark's own `round`, so
+    * ANSI cast errors, overflow and nulls behave as before.
+    */
+  private[graft] def halfUpLong(v: Column): Column = {
+    val a = abs(v)
+    val f = floor(a) // BIGINT
+    val r = f + when(a - f >= 0.5, lit(1L)).otherwise(lit(0L))
+    when(a < lit(4503599627370496.0), when(v < 0, -r).otherwise(r))
+      .otherwise(round(v, 0).cast("long"))
+  }
 
   private def centsSum(c: Column): Column = sum(cents(c)) / 100.0
 

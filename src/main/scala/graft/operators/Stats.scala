@@ -352,6 +352,11 @@ object Stats {
     * be visible at the call site where the grid [lo, hi) is chosen,
     * because the two must agree (PSI over values scaled by 1000 needs
     * a grid in thousandths).
+    *
+    * It keeps Spark's `round`, unlike the BigDecimal-free
+    * `SparkEntry.halfUpLong` behind the core queries' cents: the input
+    * type belongs to the caller, and a DECIMAL input rounds on Spark's
+    * decimal path, which a double-only form would not reproduce.
     */
   def scaleToLong(c: Column, factor: Long): Column = {
     require(factor > 0, s"scaleToLong: factor must be positive, got $factor")

@@ -19,11 +19,13 @@ import graft.streaming.Streams
   * timed against a STATELESS reference pipeline (same volume, same
   * micro-batch cadence, same per-row hash work) in the same JVM, and
   * the gate is the RATIO of the medians of [[Pairs]] alternating
-  * chain / ref runs. Measured band on local[4]: chain/ref
-  * 5.5-6.8x warm (two state stores pay per-batch commit overhead the
-  * stateless side never sees); the 10x ceiling trips on a ~1.8x
-  * chain-side regression while absorbing scheduler jitter. An absolute
-  * floor of 1000 rows/s (measured ~4200) backstops the pathological
+  * chain / ref runs. Measured band on local[4], 4 vCPUs, as those
+  * medians: chain/ref 6.3-6.7x inside the full suite and 7.6-8.4x when
+  * the spec runs alone in a fresh test JVM (two state stores pay
+  * per-batch commit overhead the stateless side never sees); the 10x
+  * ceiling trips on a chain-side regression of ~1.5x inside the suite
+  * and ~1.2x alone, while absorbing scheduler jitter. An absolute floor
+  * of 1000 rows/s (measured 5,800-14,200) backstops the pathological
   * case where BOTH sides slow (e.g. a state store leaking into every
   * task's setup path).
   */
