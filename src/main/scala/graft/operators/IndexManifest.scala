@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
   * IVF-PQ vector index in [[Similarity]], the [[SideIndex]] tables,
   * all maintained by the one [[SegmentedIndex]] lifecycle): a one-row
   * parquet table written strictly AFTER every data table of a build.
+  * The driver writes it, as it writes every other one-row table of the
+  * lifecycle ([[writeOneRow]]).
   * Its presence certifies the tables under `path` are a consistent set
   * from one build; builders delete it FIRST, so a crash mid-(re)build
   * leaves an index that loudly refuses to serve instead of serving
@@ -370,22 +372,82 @@ private[operators] object IndexManifest {
   }
 
   /** A one-row LOCAL DataFrame of non-null Int / Long / String values
-    * — the shape of every family's info surface, and of the one-row
-    * `stats` / `tsstats` a step writes from counts it already holds.
-    * Local, so polling it (`head()`) plans no aggregate and launches no
-    * job.
+    * — the shape of every family's info surface. Local, so polling it
+    * (`head()`) plans no aggregate and launches no job.
     */
-  def infoRow(spark: SparkSession, cols: (String, Any)*): org.apache.spark.sql.DataFrame = {
+  def infoRow(spark: SparkSession, cols: (String, Any)*): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq(cols.map(_._2))), oneRowSchema(cols))
+
+  /** The schema of a one-row table: Int, Long, String and string-list
+    * cells (the manifest's segment and tombstone lists), each non-null
+    * — the types Spark gives the same values as literal columns.
+    */
+  private def oneRowSchema(cols: Seq[(String, Any)]): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    val schema = StructType(cols.map { case (n, v) =>
+    StructType(cols.map { case (n, v) =>
       StructField(n, v match {
         case _: Int => IntegerType
         case _: Long => LongType
         case _: String => StringType
+        case _: Seq[_] => ArrayType(StringType, containsNull = true)
       }, nullable = false)
     })
-    spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row.fromSeq(cols.map(_._2))), schema)
+  }
+
+  /** Write the one-row parquet table `cols` at `dir` ON THE DRIVER —
+    * every manifest, `stats` and `tsstats` of the lifecycle: values the
+    * driver already holds, for which a Spark job would add only its
+    * fixed cost (a job, a task, a commit) to a few hundred bytes. The
+    * table is the one `spark.range(1).select(<literals>).write` leaves:
+    * one `part-00000-<uuid>-c000.snappy.parquet` written through
+    * Spark's own parquet output writer with the conf
+    * `ParquetUtils.prepareWrite` sets, so the footer carries Spark's
+    * row-metadata key and the same encodings, then a `_SUCCESS` marker.
+    * Overwrite semantics, as `mode("overwrite")`: `dir` is cleared
+    * first. The data file is written under a hidden temp name
+    * ([[stageOneRow]]) and renamed into place, the [[writeAtomic]]
+    * shape: a reader sees no data file or the whole one, and a crash
+    * before the rename leaves a directory holding only the hidden
+    * temp, which every reader lists as empty — a manifest in that
+    * state is half-written residue to [[ingestRound]]'s replay.
+    */
+  def writeOneRow(spark: SparkSession, dir: String, cols: (String, Any)*): Unit = {
+    val (tmp, dst) = stageOneRow(spark, dir, cols: _*)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try require(fs.rename(tmp, dst), s"failed to rename $tmp to $dst")
+    catch { case e: Throwable => dropTemp(fs, tmp); throw e }
+    fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
+  }
+
+  /** [[writeOneRow]] up to its rename: clears `dir`, writes the data
+    * file under its hidden temp name and returns (temp, destination).
+    * A failed write deletes its temp.
+    */
+  private[operators] def stageOneRow(spark: SparkSession, dir: String,
+      cols: (String, Any)*): (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = {
+    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val (sqlConf, conf) = org.apache.spark.sql.graftbridge.Bridge.writeConfs(spark)
+    val schema = oneRowSchema(cols)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
+    val writer = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val fs = d.getFileSystem(conf)
+    if (fs.exists(d)) fs.delete(d, true): Unit
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${writer.getFileExtension(ctx)}"
+    val tmp = new org.apache.hadoop.fs.Path(d, s".$name.tmp")
+    try {
+      val w = writer.newInstance(tmp.toString, schema, ctx)
+      try w.write(org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(schema)(org.apache.spark.sql.Row.fromSeq(cols.map(_._2)))
+        .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+      finally w.close()
+    } catch { case e: Throwable => dropTemp(fs, tmp); throw e }
+    (tmp, new org.apache.hadoop.fs.Path(d, name))
   }
 
   private def manifestDir(
@@ -397,8 +459,8 @@ private[operators] object IndexManifest {
 
   /** The manifest directory's identity on disk, or None when absent.
     * Directory mtimes alone are too coarse to trust across filesystems;
-    * the per-file (name, length, mtime) triple is not — Spark writes
-    * every commit under a fresh part-file UUID, so two generations can
+    * the per-file (name, length, mtime) triple is not — every commit
+    * lands under a fresh part-file UUID, so two generations can
     * never collide.
     */
   private def fingerprint(spark: SparkSession, path: String): Option[String] =
@@ -498,15 +560,18 @@ private[operators] object IndexManifest {
     * subtract the union of listed tombstone ids, and compaction is
     * what applies them physically. Returns the published generation's
     * [[Handle]], so a step that builds on it need not load it back.
+    *
+    * The driver writes the manifest ([[writeOneRow]]; no Spark job):
+    * it is the one step of a publish that must land exactly once and
+    * last, and a single driver-side rename is that commit — a crash
+    * before it leaves no readable manifest, so the generation does not
+    * exist, and a crash after it leaves the whole generation.
     */
   def write(
       spark: SparkSession, path: String, version: Int = 1, flavor: String = "",
       segments: Seq[String] = Seq.empty, tombstones: Seq[String] = Seq.empty): Handle = {
-    spark.range(1).select(
-        lit(version).as("format_version"), lit(flavor).as("flavor"),
-        typedLit(segments).as("segments"),
-        typedLit(tombstones).as("tombstones"))
-      .write.mode("overwrite").parquet(s"$path/manifest")
+    writeOneRow(spark, s"$path/manifest", "format_version" -> version, "flavor" -> flavor,
+      "segments" -> segments, "tombstones" -> tombstones)
     // cache the generation just written instead of paying the next
     // handle() a parquet read of it — but only when it would load:
     // a manifest whose roots do not (yet) exist keeps the invalidate,
@@ -974,13 +1039,15 @@ private[operators] object IndexManifest {
       finally out.close()
       org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
         .rename(tmp, fs.makeQualified(dst), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case e: Throwable =>
-        try { if (fs.exists(tmp)) fs.delete(tmp, false): Unit }
-        catch { case _: Throwable => () }
-        throw e
-    }
+    } catch { case e: Throwable => dropTemp(fs, tmp); throw e }
   }
+
+  /** Deletes a failed write's temp, best effort: the write's own error
+    * is the one to report.
+    */
+  private def dropTemp(fs: org.apache.hadoop.fs.FileSystem, tmp: org.apache.hadoop.fs.Path): Unit =
+    try { if (fs.exists(tmp)) fs.delete(tmp, false): Unit }
+    catch { case _: Throwable => () }
 
   private def historyPath(pointerPath: String): String = pointerPath + ".history"
 

@@ -78,6 +78,13 @@ object Retrieval {
       .where(col(textCol).isNotNull)
       .select(col(idCol), docLen(textCol).as("dl"))
 
+  /** The corpus stats (n_docs, total_len) of a relation with a `dl`
+    * column — the ONE aggregate behind [[bm25]]'s length
+    * normalization, each segment's `stats` and each delete's `tsstats`.
+    */
+  private def corpusStats: Seq[Column] =
+    Seq(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
+
   /** One matched term's score contribution, from columns
     * (tf, df, dl, n_docs, total_len) — the ONE arithmetic shape both
     * the direct path and the indexed serve path share, so the two can
@@ -111,9 +118,7 @@ object Retrieval {
         org.apache.spark.sql.expressions.Window.partitionBy(col("term"))))
     // stats count over ALL non-null-text docs (zero-match docs still
     // count toward N and L) — a sizes-only second scan, no explode
-    val stats = docLengths(docs, idCol, textCol).agg(
-      count(lit(1)).as("n_docs"),
-      coalesce(sum("dl"), lit(0L)).as("total_len"))
+    val stats = docLengths(docs, idCol, textCol).agg(corpusStats.head, corpusStats.tail: _*)
     tfdl
       .join(broadcast(queries), Seq("term"))
       .crossJoin(broadcast(stats))
@@ -154,10 +159,11 @@ object Retrieval {
     * table only names docs with >= 1 token, so a previously indexed
     * empty doc would otherwise slip the guard and double-count
     * n_docs); and LAST, the `manifest` marker (now also carrying the
-    * segment list) that [[searchTopKIndexed]] validates — the four
-    * tables are four sequential write jobs, and without a commit
-    * marker a failure between them would leave a MIXED index (new
-    * postings, stale df/stats) that serves silently wrong scores.
+    * segment list) that [[searchTopKIndexed]] validates — the tables
+    * are sequential writes (three jobs, then `stats` and the manifest
+    * from the driver), and without a commit marker a failure between
+    * them would leave a MIXED index (new postings, stale df/stats)
+    * that serves silently wrong scores.
     * [[updateIndex]] appends further segments; serve paths union the
     * listed segments (df summing, stats adding across them), so
     * maintenance writes O(increment) bytes; [[compactIndex]] merges
@@ -207,13 +213,14 @@ object Retrieval {
       writeTables(invertedIndex(docs, idCol, textCol), None,
         docs.where(col(textCol).isNotNull).select(col(idCol), docLen(textCol).as("dl"),
           contentHash(col(textCol)).as("content_hash")),
-        segPath, cache = true)
+        segPath)
 
     // nothing re-tokenizes: postings are a columnar copy re-sorted
     // GLOBALLY by term, doclen concatenates. With deletes in play the
-    // per-segment termdf/stats over-count the tombstoned docs, so both
-    // recompute from the masked relations (cached: each feeds two
-    // writes); without deletes the cheap segment termdf sums are exact
+    // per-segment termdf over-counts the tombstoned docs, so it
+    // recounts from the masked postings; without deletes the cheap
+    // segment termdf sums are exact. stats always come from the masked
+    // doclen write
     def rehome(spark: SparkSession, h: IndexManifest.Handle, segPath: String): Unit = {
       val id = docIdCol(spark, h.segments)
       val ts = IndexManifest.tombstoneRel(spark, h, id)
@@ -221,7 +228,7 @@ object Retrieval {
         IndexManifest.maskLive(IndexManifest.segTableOrd(spark, h, table), ts, id)
       val termdf = if (ts.nonEmpty) None else Some(IndexManifest.segTable(spark, h, "termdf")
         .groupBy("term").agg(sum("df").as("df")))
-      writeTables(live("postings"), termdf, live("doclen"), segPath, cache = ts.nonEmpty)
+      writeTables(live("postings"), termdf, live("doclen"), segPath)
     }
 
     /** The live doclen ids — doclen, not postings, because it is the
@@ -234,14 +241,13 @@ object Retrieval {
     def incrementIds(increment: DataFrame): DataFrame =
       broadcast(increment.where(col(textCol).isNotNull).select(col(idCol)).distinct())
 
-    // the deleted ids' rows of the LIVE doclen: earlier tombstones
-    // already masked their rows, so the generations' masses add
-    // without overlap across delete/re-add/delete cycles. total_len
-    // needs the rows, so a known id count saves nothing here
-    override def tombstoneMass(spark: SparkSession, h: IndexManifest.Handle, ids: DataFrame,
-        n: Option[Long]): DataFrame =
-      liveDoclen(spark, h).join(ids, Seq(idCol), "left_semi")
-        .agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
+    // a delete removes the deleted docs' (n_docs, total_len): the live
+    // doclen rows carry dl beside the id, so the guard's (or the upsert
+    // split's) join already holds what the mass sums
+    override def liveMass(spark: SparkSession, h: IndexManifest.Handle): DataFrame =
+      liveDoclen(spark, h).select(col(idCol), col("dl"))
+
+    override def tombstoneMass: Seq[Column] = corpusStats
 
     private def liveDoclen(spark: SparkSession, h: IndexManifest.Handle): DataFrame =
       IndexManifest.maskLive(IndexManifest.segTableOrd(spark, h, "doclen"),
@@ -250,29 +256,33 @@ object Retrieval {
 
   /** One segment's four tables: `postings` repartitioned AND sorted by
     * term (row-group min/max pruning), `termdf` (given, else counted
-    * from the postings), and the one-row `stats` plus `doclen` from the
-    * doc-length relation. `cache` holds each relation across its two
-    * writes.
+    * from the postings, which are then held across their two writes),
+    * `doclen`, and the one-row `stats` (n_docs, total_len) of the
+    * doclen rows.
+    *
+    * Who writes `stats`: the driver ([[IndexManifest.writeOneRow]]),
+    * from a [[Dataset.observe]] placed directly under the doclen write,
+    * so the aggregate runs inside the write's own result stage — no
+    * second scan, no persist, no job of its own. Exactly once because
+    * Spark merges a result-stage task's accumulator update only for the
+    * first successful attempt of each partition: a retried, failed or
+    * speculative attempt adds nothing, just as it commits no file.
     */
   private def writeTables(postings: DataFrame, termdf: Option[DataFrame], doclen: DataFrame,
-      segPath: String, cache: Boolean): Unit = {
-    def held(df: DataFrame)(use: DataFrame => Unit): Unit =
-      if (!cache) use(df)
-      else {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try use(p) finally p.unpersist(): Unit
-      }
-    held(postings) { p =>
-      p.repartition(col("term")).sortWithinPartitions("term")
+      segPath: String): Unit = {
+    if (termdf.isEmpty) postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): Unit
+    try {
+      postings.repartition(col("term")).sortWithinPartitions("term")
         .write.mode("overwrite").parquet(s"$segPath/postings")
-      termdf.getOrElse(p.groupBy("term").agg(count(lit(1)).as("df")))
+      termdf.getOrElse(postings.groupBy("term").agg(count(lit(1)).as("df")))
         .write.mode("overwrite").parquet(s"$segPath/termdf")
-    }
-    held(doclen) { d =>
-      d.agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("total_len"))
-        .write.mode("overwrite").parquet(s"$segPath/stats")
-      d.write.mode("overwrite").parquet(s"$segPath/doclen")
-    }
+    } finally if (termdf.isEmpty) postings.unpersist(): Unit
+    val stats = org.apache.spark.sql.Observation()
+    doclen.observe(stats, corpusStats.head, corpusStats.tail: _*)
+      .write.mode("overwrite").parquet(s"$segPath/doclen")
+    val st = stats.get
+    IndexManifest.writeOneRow(doclen.sparkSession, s"$segPath/stats",
+      "n_docs" -> st("n_docs"), "total_len" -> st("total_len"))
   }
 
   /** The published index's live document-id relation (one column,
@@ -351,9 +361,10 @@ object Retrieval {
     * path, O(delta) like [[updateIndex]]: no data table is rewritten;
     * the delete lands as a new tombstone directory
     * (`outPath/tombstones/ts-NNNNN` — the id list plus a one-row
-    * `tsstats` with the deleted docs' (n_docs, total_len), computed
-    * once here from `doclen` so the serve-time stats correction is a
-    * tiny negated union). Serve paths subtract: postings drop masked
+    * `tsstats` with the deleted docs' (n_docs, total_len), summed by
+    * the liveness guard's own join over the live `doclen` and written
+    * by the driver, so the serve-time stats correction is a tiny
+    * negated union). Serve paths subtract: postings drop masked
     * rows, per-term df subtracts the masked posting counts, stats
     * subtract tsstats — BM25 scores after a delete are EXACTLY a fresh
     * build's on the remaining corpus. [[compactIndex]] applies

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -23,6 +23,14 @@ import org.apache.spark.storage.StorageLevel
   * explicit O(corpus) re-home that pays the segment and tombstone debt.
   * Every step writes its data first and its manifest LAST, so a crash
   * leaves an index that refuses to serve, never a mixed one.
+  *
+  * Who writes what: Spark jobs write the data tables (postings,
+  * termdf, doclen, vectors, rows, tombstone ids); the driver writes
+  * the one-row tables — the manifest, each segment's `stats` and each
+  * tombstone generation's `tsstats` ([[IndexManifest.writeOneRow]]) —
+  * from numbers the data work already produced: a footer row count, a
+  * metric observed inside a data write, or the aggregate a guard
+  * already runs. Publishing a generation launches no job of its own.
   */
 private[operators] object SegmentedIndex {
 
@@ -88,14 +96,24 @@ private[operators] object SegmentedIndex {
       */
     def incrementIds(increment: DataFrame): DataFrame
 
-    /** The one-row `tsstats` of a delete of `ids` (live ids of `h`);
-      * `n` is the number of ids when the caller has already counted
-      * them, so the row count needs no query.
+    /** The live rows of `h` a delete's mass sums over: [[indexIdCol]]
+      * plus whatever columns [[tombstoneMass]] reads. By default the
+      * live ids alone — the mass is a row count.
       */
-    def tombstoneMass(spark: SparkSession, h: IndexManifest.Handle, ids: DataFrame,
-        n: Option[Long]): DataFrame =
-      n.fold(ids.agg(count(lit(1)).as(statCols.head)))(c =>
-        IndexManifest.infoRow(spark, statCols.head -> c))
+    def liveMass(spark: SparkSession, h: IndexManifest.Handle): DataFrame = liveIds(spark, h)
+
+    /** The `tsstats` row of a delete, one aggregate per [[statCols]]
+      * entry over the deleted ids' [[liveMass]] rows. No step runs it
+      * as a query of its own: the delete guard's aggregate and the
+      * upsert round's replaced-id aggregate each carry it beside what
+      * they already compute, and the driver writes the row they return
+      * ([[IndexManifest.writeOneRow]]). Exactly once by construction —
+      * it is a driver-side value, computed by one action and written
+      * by one rename. Earlier tombstones already masked their rows in
+      * [[liveMass]], so the generations' masses add without overlap
+      * across delete / re-add / delete chains.
+      */
+    def tombstoneMass: Seq[Column] = Seq(count(lit(1)).as(statCols.head))
 
     /** Refuses a batch whose shape the family cannot index, from driver
       * metadata only — on build (`base` None) and update (`base` the
@@ -124,13 +142,25 @@ private[operators] object SegmentedIndex {
   }
 
   /** The one-row `stats` beside `segPath/table`: its row count as
-    * `statCol`, summed from the just-written files' footers on the
-    * driver and written from a local row — no job reads the table back.
+    * `statCol`. The driver sums it from the just-written files' footers
+    * and writes it ([[IndexManifest.writeOneRow]]) — no job reads the
+    * table back and none writes the row. Exactly once because the
+    * footers are the committed table's: a retried or speculative task
+    * leaves no data file behind the commit.
     */
   def writeCountStats(spark: SparkSession, segPath: String, table: String, statCol: String): Unit =
-    IndexManifest.infoRow(spark,
-        statCol -> IndexManifest.footerRowCount(spark, s"$segPath/$table"))
-      .write.mode("overwrite").parquet(s"$segPath/stats")
+    IndexManifest.writeOneRow(spark, s"$segPath/stats",
+      statCol -> IndexManifest.footerRowCount(spark, s"$segPath/$table"))
+
+  /** `f`'s [[Family.tombstoneMass]] over `rows`, with `lead` aggregates
+    * run first in the same job; returns the lead values, then the mass.
+    */
+  private def massAgg(f: Family, rows: DataFrame, lead: Column*): (Seq[Long], Seq[Long]) = {
+    val aggs = lead ++ f.tombstoneMass
+    val r = rows.agg(aggs.head, aggs.tail: _*).head()
+    val all = aggs.indices.map(r.getLong)
+    (all.take(lead.size), all.drop(lead.size))
+  }
 
   /** Clear `outPath`'s manifest, write the data, then the manifest;
     * returns the published generation.
@@ -203,40 +233,49 @@ private[operators] object SegmentedIndex {
     fresh(f, "delete", path, outPath)
     val h = open(spark, f, path)
     val id = f.indexIdCol
-    appendTombstone(spark, f, h, deletes, None, outPath) { ids =>
-      // one job for both refusals: a null id never matches a live id,
-      // so it lands in the anti-join beside the not-live ones
-      val notLive = ids.join(f.liveIds(spark, h), Seq(id), "left_anti")
-        .agg(count(lit(1)), count(col(id))).head()
-      require(notLive.getLong(0) == notLive.getLong(1),
+    heldIds(f, deletes) { ids =>
+      // one job for both refusals and the mass: a null id never matches
+      // a live id, so it lands among the unmatched beside the not-live
+      // ones; with none unmatched, every row is a deleted live row
+      val unmatched = col("__live").isNull
+      val (notLive, mass) = massAgg(f,
+        ids.join(f.liveMass(spark, h).withColumn("__live", lit(true)), Seq(id), "left_outer"),
+        count(when(unmatched, 1)), count(when(unmatched, col(id))))
+      require(notLive(0) == notLive(1),
         s"${f.what} delete: a delete names a null '${f.idCol}' — every delete must name a " +
           "currently-indexed row; fix the input")
-      require(notLive.getLong(1) == 0L,
-        s"${f.what} delete: ${notLive.getLong(1)} ids are not live at $path — every delete " +
+      require(notLive(1) == 0L,
+        s"${f.what} delete: ${notLive(1)} ids are not live at $path — every delete " +
           "must name a currently-indexed, not-already-deleted row")
-    }: Unit
+      appendTombstone(spark, f, h, ids, mass, outPath): Unit
+    }
   }
 
-  /** The delete step: `deletes`' distinct ids (`n` of them, when the
-    * caller counted them) as a new tombstone generation over `h`,
-    * published at `outPath`. `guard` sees the ids first and refuses by
-    * throwing; the step itself checks nothing.
+  /** `rows`' distinct ids, named [[Family.indexIdCol]] and held in
+    * memory while `use` runs — both delete paths hand their tombstone
+    * ids to [[appendTombstone]] this way, so the `ids` table keeps the
+    * cached distinct's partitioning (and file count) whichever path
+    * wrote it, and the guarded delete reads them twice.
+    */
+  private def heldIds[T](f: Family, rows: DataFrame)(use: DataFrame => T): T = {
+    val ids = rows.select(col(f.idCol).as(f.indexIdCol)).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try use(ids) finally ids.unpersist(): Unit
+  }
+
+  /** The delete step, unguarded: the distinct live `ids` (one column
+    * named [[Family.indexIdCol]]) as a new tombstone generation over
+    * `h` whose `tsstats` row is `mass`, published at `outPath`.
     */
   private def appendTombstone(spark: SparkSession, f: Family, h: IndexManifest.Handle,
-      deletes: DataFrame, n: Option[Long], outPath: String)(
-      guard: DataFrame => Unit): IndexManifest.Handle = {
-    val ids = deletes.select(col(f.idCol).as(f.indexIdCol)).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      guard(ids)
-      val ts = s"tombstones/${IndexManifest.nextTombstoneName(h.tombstones)}"
-      publish(spark, outPath, h.flavor, IndexManifest.qualify(spark, h.segments),
-        IndexManifest.qualify(spark, h.tombstones) :+ ts) {
-        ids.withColumn("up_to", lit(h.segments.size))
-          .write.mode("overwrite").parquet(s"$outPath/$ts/ids")
-        f.tombstoneMass(spark, h, ids, n).write.mode("overwrite").parquet(s"$outPath/$ts/tsstats")
-      }
-    } finally ids.unpersist()
+      ids: DataFrame, mass: Seq[Long], outPath: String): IndexManifest.Handle = {
+    val ts = s"tombstones/${IndexManifest.nextTombstoneName(h.tombstones)}"
+    publish(spark, outPath, h.flavor, IndexManifest.qualify(spark, h.segments),
+      IndexManifest.qualify(spark, h.tombstones) :+ ts) {
+      ids.withColumn("up_to", lit(h.segments.size))
+        .write.mode("overwrite").parquet(s"$outPath/$ts/ids")
+      IndexManifest.writeOneRow(spark, s"$outPath/$ts/tsstats", f.statCols.zip(mass): _*)
+    }
   }
 
   /** Re-home the live rows into ONE fresh segment at `outPath` — the
@@ -366,8 +405,10 @@ private[operators] object SegmentedIndex {
     * already established once:
     *  - batch ids are non-null and distinct (and payloads non-null):
     *    [[IndexManifest.requireUpsertBatch]], before any state changes;
-    *  - the replaced ids are live in `h`: they are the batch's
-    *    semi-join against `h`'s live ids, persisted and counted once;
+    *  - the replaced ids are live in `h`: they are the batch's join
+    *    against `h`'s live rows ([[Family.liveMass]]), persisted and
+    *    aggregated once — the count answers the emptiness probe and
+    *    the same aggregate is the new tombstone's `tsstats` mass;
     *  - no batch id is live after the delete: the new tombstone
     *    generation's `up_to` is `h`'s segment count, so it masks every
     *    replaced id in every segment of `h`.
@@ -385,18 +426,19 @@ private[operators] object SegmentedIndex {
         IndexManifest.requireDisjointRoot(spark, cur, outRoot, f.what)
         val h = open(spark, f, cur)
         f.checkSchema(rows, cur, Some(h))
-        // persist the replaced-id split so the live scan runs ONCE: the
-        // emptiness probe and the delete step's reads hit the cache
+        // persist the replaced-id split so the live scan runs ONCE: its
+        // one aggregate (the emptiness probe and the tombstone mass) and
+        // the delete step's id write hit the cache. An inner join, not
+        // a semi-join, so the live rows' mass columns ride along; an id
+        // is live at most once, so it keeps one row per replaced id
         val replaced = rows.select(col(f.idCol))
-          .join(f.liveIds(spark, h).select(col(f.indexIdCol).as(f.idCol)),
-            Seq(f.idCol), "left_semi")
+          .join(f.liveMass(spark, h).withColumnRenamed(f.indexIdCol, f.idCol), Seq(f.idCol))
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val nReplaced = replaced.count()
+          val mass = massAgg(f, replaced)._2
           val base =
-            if (nReplaced == 0L) h
-            else appendTombstone(spark, f, h, replaced, Some(nReplaced),
-              s"$outRoot/deleted")(_ => ())
+            if (mass.head == 0L) h
+            else heldIds(f, replaced)(appendTombstone(spark, f, h, _, mass, s"$outRoot/deleted"))
           val updated = appendSegment(spark, f, base, rows, s"$outRoot/updated")
           compactIfDue(spark, f, s"$outRoot/updated", updated, outRoot, maxSegments,
             maxMaskedRatio)

@@ -22,4 +22,13 @@ object Bridge {
     case c: org.apache.spark.sql.classic.SparkSession => Some(c.sessionUUID)
     case _ => None
   }
+
+  /** The classic session's SQL conf and a fresh Hadoop conf carrying
+    * it — what Spark's own file writes prepare an output writer from.
+    */
+  def writeConfs(s: org.apache.spark.sql.SparkSession): (
+      org.apache.spark.sql.internal.SQLConf, org.apache.hadoop.conf.Configuration) = {
+    val st = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    (st.conf, st.newHadoopConf())
+  }
 }

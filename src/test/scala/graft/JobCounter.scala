@@ -26,4 +26,30 @@ object JobCounter {
   }
 
   def jobs(spark: SparkSession)(body: => Any): Int = jobsDuring(spark)(body)._2
+
+  /** The output directories of every Spark file-write command the
+    * block ran, in completion order — which tables a step wrote through
+    * a job, as opposed to from the driver.
+    */
+  def writesDuring(spark: SparkSession)(body: => Any): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val sc = spark.sparkContext
+    ListenerDrain.drain(sc)
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.foreach {
+          case c: InsertIntoHadoopFsRelationCommand => out.add(c.outputPath.toUri.getPath): Unit
+          case _ => ()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      ListenerDrain.drain(sc)
+      scala.jdk.CollectionConverters.CollectionHasAsScala(out).asScala.toSeq
+    } finally spark.listenerManager.unregister(l)
+  }
 }

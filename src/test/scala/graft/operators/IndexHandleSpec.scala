@@ -168,4 +168,119 @@ class IndexHandleSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     intercept[org.apache.spark.sql.AnalysisException](IndexManifest.readDir(spark, dir))
   }
+
+  /** The parquet data files of a one-row table directory, by name. */
+  private def dataFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+
+  private def footer(f: java.io.File) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  test("a driver-written one-row table is the table a Spark write of the same row leaves") {
+    import org.apache.spark.sql.functions.{lit, typedLit}
+    val root = tmp("one-row-format")
+    val segs = Seq("segments/seg-00000", s"$root/abs/seg-00001")
+    Seq(s"$root/drv/segments/seg-00000", s"$root/ref/segments/seg-00000", s"$root/abs/seg-00001")
+      .foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
+    val manifest = Seq("format_version" -> 3, "flavor" -> "pq-direct", "segments" -> segs,
+      "tombstones" -> Seq("tombstones/ts-00000"))
+    val rows = Seq(
+      "manifest" -> manifest,
+      "pq-stats" -> Seq("n_vecs" -> 40L),
+      "side-stats" -> Seq("n_rows" -> 7L),
+      "bm25-stats" -> Seq("n_docs" -> 12L, "total_len" -> 57L),
+      "bm25-tsstats" -> Seq("n_docs" -> 0L, "total_len" -> 0L))
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$root/drv/tombstones/ts-00000"))
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$root/ref/tombstones/ts-00000"))
+    rows.foreach { case (what, cols) =>
+      val (drv, ref) =
+        if (what == "manifest") (s"$root/drv/manifest", s"$root/ref/manifest")
+        else (s"$root/drv-$what", s"$root/ref-$what")
+      if (what == "manifest")
+        IndexManifest.write(spark, s"$root/drv", version = 3, flavor = "pq-direct",
+          segments = segs, tombstones = Seq("tombstones/ts-00000")): Unit
+      else IndexManifest.writeOneRow(spark, drv, cols: _*)
+      spark.range(1).select(cols.map {
+        case (n, v: Seq[_]) => typedLit(v.map(_.toString)).as(n)
+        case (n, v) => lit(v).as(n)
+      }: _*).write.parquet(ref)
+
+      val (d, r) = (spark.read.parquet(drv), spark.read.parquet(ref))
+      assert(d.schema == r.schema, what)
+      assert(d.collect().toSeq == r.collect().toSeq, what)
+      assert(IndexManifest.readDir(spark, drv).schema == IndexManifest.readDir(spark, ref).schema,
+        what)
+      assert(IndexManifest.readDir(spark, drv).schema == r.schema, what)
+      val longs = cols.collect { case (n, _: Long) => n }
+      assert(IndexManifest.sumOneRowTables(spark, Seq(drv), longs) ==
+        IndexManifest.sumOneRowTables(spark, Seq(ref), longs), what)
+      assert(IndexManifest.footerRowCount(spark, drv) == 1L, what)
+      assert(IndexManifest.footerRowCount(spark, ref) == 1L, what)
+      // one data file beside _SUCCESS, each with its checksum
+      val names = new java.io.File(drv).list().toSeq.sorted
+      val part = names.filter(_.startsWith("part-"))
+      assert(part.size == 1 && part.head.matches(
+        "part-00000-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}-c000\\.snappy\\.parquet"),
+        s"$what: $names")
+      assert(names == Seq(s".${part.head}.crc", "._SUCCESS.crc", "_SUCCESS", part.head).sorted,
+        s"$what: $names")
+      // the footer Spark's row-carrying file has: row metadata, schema,
+      // encodings — and so the same bytes on disk
+      val refFile = dataFiles(ref).find(f => footer(f).getBlocks.size == 1).get
+      val (fd, fr) = (footer(dataFiles(drv).head), footer(refFile))
+      assert(fd.getFileMetaData.getKeyValueMetaData == fr.getFileMetaData.getKeyValueMetaData,
+        what)
+      assert(fd.getFileMetaData.getSchema == fr.getFileMetaData.getSchema, what)
+      assert(fd.getBlocks.toString == fr.getBlocks.toString, what)
+      assert(dataFiles(drv).head.length == refFile.length, what)
+    }
+    // handle() reads both manifests back to the same generation
+    IndexManifest.handleCacheClear()
+    val (hd, hr) = (IndexManifest.handle(spark, s"$root/drv"), IndexManifest.handle(spark, s"$root/ref"))
+    assert(hd == hr.copy(segments = hr.segments.map(_.replace(s"$root/ref/", s"$root/drv/")),
+      tombstones = hr.tombstones.map(_.replace(s"$root/ref/", s"$root/drv/"))))
+    assert(hd.version == 3 && hd.flavor == "pq-direct" &&
+      hd.segments == Seq(s"$root/drv/segments/seg-00000", s"$root/abs/seg-00001"))
+  }
+
+  test("a manifest holding only the one-row writer's temp file is crash residue, and a refusal under the serving root") {
+    import spark.implicits._
+    val root = tmp("one-row-crash")
+    val ptr = s"$root/CURRENT"
+    val docs = (1L to 7L).map(i => (i, s"spark join doc $i")).toDF("doc_id", "text")
+    Retrieval.buildIndex(docs.where($"doc_id" <= 4), "doc_id", "text", s"$root/base")
+    ServePointer.publish(spark, ptr, s"$root/base", "BM25")
+    // a crash between the writer's data-file write and its rename
+    def crashBeforeRename(indexRoot: String): Unit = {
+      IndexManifest.stageOneRow(spark, s"$indexRoot/manifest", "format_version" -> 3,
+        "flavor" -> "", "segments" -> Seq.empty[String], "tombstones" -> Seq.empty[String]): Unit
+      val names = new java.io.File(s"$indexRoot/manifest").list().toSeq
+      assert(names.nonEmpty && names.forall(_.startsWith(".")), names)
+    }
+    crashBeforeRename(s"$root/gen/batch-0/updated")
+    Retrieval.ingestIndexBatch(spark, docs.where($"doc_id" >= 5), 0L, ptr, s"$root/gen",
+      "doc_id", "text")
+    val served = ServePointer.read(spark, ptr)
+    assert(served.contains("/gen/batch-0/"),
+      "the temp-only residue must have been cleaned and the batch committed")
+    assert(Retrieval.liveDocIds(spark, served).count() == 7L)
+    // the same shape under the SERVING root is out-of-band damage: the
+    // replay refuses and deletes nothing
+    crashBeforeRename(served.stripPrefix("file:"))
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.ingestIndexBatch(spark, docs.where($"doc_id" >= 5), 0L, ptr, s"$root/gen",
+        "doc_id", "text")
+    }
+    assert(e.getMessage.contains("out-of-band corruption"), e.getMessage)
+    assert(new java.io.File(served.stripPrefix("file:")).exists,
+      "the refusal must not have deleted the serving root")
+    assert(ServePointer.read(spark, ptr) == served)
+  }
 }

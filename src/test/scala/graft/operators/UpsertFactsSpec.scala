@@ -135,6 +135,81 @@ class UpsertFactsSpec extends SparkTestBase {
     chain(pq)
   }
 
+  test("BM25 upsert rounds publish stats and tsstats equal to doclen's count and sum, zero-token docs included") {
+    val root = tmp("upsert-bm25-numbers")
+    val ptr = s"$root/CURRENT"
+    // every fifth (id + version) is a zero-token document (dl = 0);
+    // the rest vary in length with the id
+    def text(i: Long, v: Int): String =
+      if ((i + v) % 5 == 0) " " * (v % 3)
+      else (Seq(words((i % 7).toInt), s"v$v") ++ Seq.fill((i % 4).toInt)("pad") :+ s"doc$i")
+        .mkString(" ")
+    def dl(t: String): Long = t.split(" ").count(_.nonEmpty).toLong
+    def docs(m: Map[Long, Int]): DataFrame =
+      m.toSeq.map { case (i, v) => (i, text(i, v)) }.toDF("doc_id", "text").repartition(4)
+    var model: Map[Long, Int] = (1L to 40L).map(_ -> 0).toMap
+    Retrieval.buildIndex(docs(model), "doc_id", "text", s"$root/base")
+    ServePointer.publish(spark, ptr, s"$root/base")
+
+    def numbers(df: DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    def row(dir: String): (Long, Long) = {
+      val r = spark.read.parquet(dir).collect()
+      assert(r.length == 1, s"$dir holds ${r.length} rows")
+      (r.head.getAs[Long]("n_docs"), r.head.getAs[Long]("total_len"))
+    }
+    def check(step: String): Unit = {
+      val cur = ServePointer.read(spark, ptr)
+      val h = IndexManifest.handle(spark, cur)
+      h.segments.foreach { s =>
+        assert(row(s"$s/stats") == numbers(spark.read.parquet(s"$s/doclen")), s"$step: $s")
+      }
+      // a tombstone's mass is its ids' rows in the doclen live when it
+      // was published: the segments below its horizon, masked by the
+      // tombstones before it
+      h.tombstones.zipWithIndex.foreach { case (t, k) =>
+        val ids = spark.read.parquet(s"$t/ids")
+        val upTo = ids.agg(max("up_to")).head().getInt(0)
+        val live = IndexManifest.maskLive(
+          IndexManifest.segTableOrd(spark, h.segments.take(upTo), "doclen"),
+          IndexManifest.tombstoneRel(spark, h.tombstones.take(k), "doc_id"), "doc_id")
+        assert(row(s"$t/tsstats") ==
+          numbers(live.join(ids.select("doc_id"), Seq("doc_id"), "left_semi")), s"$step: $t")
+      }
+      val info = Retrieval.indexInfo(spark, cur).head()
+      assert(info.getAs[Long]("n_docs_live") == model.size.toLong, s"$step: n_docs_live")
+      assert(info.getAs[Long]("total_len_live") ==
+        model.toSeq.map { case (i, v) => dl(text(i, v)) }.sum, s"$step: total_len_live")
+      val q = Seq("spark", "join", "v1", "v2", "pad")
+      def ranked(df: DataFrame) =
+        df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(ranked(Retrieval.searchTopKIndexed(spark, cur, "doc_id", q, 60)) ==
+        ranked(Retrieval.searchTopK(docs(model), "doc_id", "text", q, 60)), s"$step: scores")
+    }
+    def round(b: Long, batch: Map[Long, Int]): Unit = {
+      Retrieval.ingestUpsertBatch(spark, docs(batch), b, ptr, s"$root/gen", "doc_id", "text")
+      model ++= batch
+      check(s"round $b")
+    }
+    def delete(ids: Seq[Long], out: String): Unit = {
+      Retrieval.deleteFromIndex(spark, ServePointer.read(spark, ptr), ids.toDF("doc_id"),
+        "doc_id", s"$root/$out")
+      ServePointer.publish(spark, ptr, s"$root/$out")
+      model --= ids
+      check(out)
+    }
+    check("build")
+    // id 4 (zero tokens at version 1) is replaced, deleted, re-added,
+    // deleted again; id 5 starts with zero tokens
+    round(0L, Map(4L -> 1, 5L -> 1, 9L -> 1, 101L -> 1, 104L -> 1))
+    delete(Seq(4L, 10L), "del-a")
+    round(1L, Map(4L -> 2, 5L -> 2, 15L -> 2, 102L -> 2))
+    delete(Seq(4L, 104L), "del-b")
+    round(2L, Map(5L -> 3, 9L -> 3, 20L -> 3, 103L -> 3))
+  }
+
   test("the upsert round still refuses a drifted side schema and an IVF-PQ flavor mismatch") {
     val root = tmp("upsert-refusals")
     SideIndex.build(side.rows((1L to 10L).map(_ -> 0)), "doc_id", "t", s"$root/side")
