@@ -92,20 +92,6 @@ object Bench {
     canarySec() // warm the canary's codegen so both timings measure the box
     val canaryStart = canarySec()
 
-    // GRAFT_BENCH_MEM=1 adds per-query PEAK HEAP to the artifact: the
-    // JVM's per-pool peak-usage counters are reset before each query's
-    // runs and summed after — in local mode driver and executors share
-    // one heap, so this is the sizing signal for "which queries make
-    // the sweep need a large heap" (BENCH_SF1's 48g question). Summing
-    // pool peaks slightly overcounts (pools peak at different moments)
-    // — fine for a sizing bound.
-    val memTrack = sys.env.get("GRAFT_BENCH_MEM").contains("1")
-    def heapPools = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.isValid && p.getType == java.lang.management.MemoryType.HEAP)
-    }
-
     val results = benchSet.map { name =>
       val fn = SparkEntry.queries(name)
       // Iterative (CC/PageRank loop) and sub-second serve queries are the
@@ -120,7 +106,6 @@ object Bench {
       // Collect garbage outside the timed window so a prior query's heap
       // isn't billed to this one.
       System.gc()
-      if (memTrack) heapPools.foreach(_.resetPeakUsage())
       var n = -1L
       // A failed run contributes no time: its (near-zero) exception-path
       // wall time would otherwise drag the median down and mask the
@@ -144,21 +129,17 @@ object Bench {
       val cut = times.filter(_ <= times.headOption.getOrElse(0.0) * 3)
       val sec = if (cut.isEmpty) -1.0 else cut(cut.length / 2)
       val (lo, hi) = if (times.isEmpty) (-1.0, -1.0) else (times.head, times.last)
-      val peakMb =
-        if (!memTrack) -1.0
-        else heapPools.map(_.getPeakUsage.getUsed).sum / (1024.0 * 1024.0)
       // Drop any cache a query persisted (e.g. LSH bands) so queries
       // don't accumulate executor memory pressure across the sweep.
       spark.sharedState.cacheManager.clearCache()
       System.err.println(
-        f"[bench] $name%-24s $sec%8.3f s  ($n rows, median of $effRuns, spread [$lo%.3f, $hi%.3f]" +
-          (if (memTrack) f", peak heap $peakMb%.0f MB)" else ")"))
-      (name, sec, lo, hi, peakMb)
+        f"[bench] $name%-24s $sec%8.3f s  ($n rows, median of $effRuns, spread [$lo%.3f, $hi%.3f])")
+      (name, sec, lo, hi)
     }
     val canaryEnd = canarySec()
     System.err.println(
       f"[bench] canary (fixed CPU job): start $canaryStart%.3f s, end $canaryEnd%.3f s")
-    val qs = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // The FULL artifact — per-query medians AND [min,max] spreads, one
     // query per line — persists to a file: the driver's stdout capture
@@ -169,9 +150,8 @@ object Bench {
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("GRAFT_BENCH_OUT", "target/bench.json"))
     if (outPath.getParent != null) java.nio.file.Files.createDirectories(outPath.getParent): Unit
-    val fullLines = results.map { case (k, v, lo, hi, peakMb) =>
-      f"""    "$k%s": {"sec": $v%.3f, "spread": [$lo%.3f, $hi%.3f]""" +
-        (if (memTrack) f""", "peak_heap_mb": $peakMb%.0f}""" else "}") }
+    val fullLines = results.map { case (k, v, lo, hi) =>
+      f"""    "$k%s": {"sec": $v%.3f, "spread": [$lo%.3f, $hi%.3f]}""" }
     java.nio.file.Files.writeString(outPath,
       f"""{
   "metric": "total", "value": $total%.3f, "unit": "sec", "sf": "$sfDir",
@@ -190,7 +170,7 @@ ${fullLines.mkString(",\n")}
       val ratio = sys.env.getOrElse("GRAFT_BENCH_GUARD_RATIO", "2.0").toDouble
       val base = parseBaseline(path)
       val regressed = results.collect {
-        case (name, sec, _, _, _) if base.get(name).exists(b => b > 0 && sec > b * ratio) =>
+        case (name, sec, _, _) if base.get(name).exists(b => b > 0 && sec > b * ratio) =>
           f"$name: $sec%.3f s vs baseline ${base(name)}%.3f s (>${ratio}%.1fx)"
       }
       if (regressed.nonEmpty) {

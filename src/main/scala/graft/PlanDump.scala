@@ -32,8 +32,9 @@ object PlanDump {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val formatted = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        // execute so AQE resolves its final stages (RDD count moves
-        // only per-partition longs — the Explain.scala stance)
+        // execute THIS QueryExecution's RDD so AQE resolves its final
+        // stages: df.count() would plan a separate QueryExecution, and
+        // an RDD count moves only per-partition longs
         val n = df.queryExecution.toRdd.count()
         val finalPlan =
           df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)

@@ -62,11 +62,4 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Wall-clock a block in seconds — the shared smoke-run timer. */
-  def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
 }

@@ -2893,7 +2893,7 @@ object SparkEntry {
         pairGenerator = Dedup.lshCandidatePairsSkewSafe(_, _, _, _, _, nGroups = 4))),
     "dedup_near_collapsed" -> ((s, dir) =>
       // exact-collapse before LSH: kills the k^2 candidate blow-up of
-      // exact-dup groups at its source (see ScaleSmoke growth curve)
+      // exact-dup groups at its source (ScaleLawSpec pins the N² growth)
       Dedup.nearDuplicatesCollapsed(
         t(s, dir, "documents"), "doc_id", "text", numHashes = 8, rowsPerBand = 2, thresholdPct = 40)),
     "dedup_cluster_sizes" -> ((s, dir) =>

@@ -18,17 +18,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The width derives from the relation's MATERIALIZED cache size —
   * exact bytes from the cache build, never a plan estimate — at
-  * `spark.graft.loop.targetPartitionBytes` per partition (default
-  * 32 MB: small enough that a loop over a few hundred MB still spreads
-  * across a local box, within guide §2.2's 100 MB–1 GB window once the
-  * relation is cluster-sized; production can raise it per deployment).
+  * [[TargetBytes]] per partition.
   */
 private[graft] object AdaptiveLoop {
 
-  private val TargetBytesKey = "spark.graft.loop.targetPartitionBytes"
-
-  private def targetBytes(spark: SparkSession): Long =
-    spark.conf.get(TargetBytesKey, (32L * 1024 * 1024).toString).toLong
+  /** 32 MB: small enough that a loop over a few hundred MB still
+    * spreads across a local box, within guide §2.2's 100 MB–1 GB window
+    * once the relation is cluster-sized.
+    */
+  private val TargetBytes = 32L * 1024 * 1024
 
   /** Partition count for a cached-and-counted loop relation: actual
     * cached bytes / target, at least 2, never more than the row count
@@ -64,11 +62,10 @@ private[graft] object AdaptiveLoop {
     * layout instead of 32 near-empty tasks per round.
     */
   def partitionsForBytes(spark: SparkSession, bytes: BigInt, rows: Long): Int = {
-    val target = targetBytes(spark)
-    val byBytes = (bytes / BigInt(target)).toLong + 1L
+    val byBytes = (bytes / BigInt(TargetBytes)).toLong + 1L
     val cores = spark.sparkContext.defaultParallelism.toLong
     val parallelFloor =
-      math.min(cores, (bytes / BigInt(math.max(1L, target / 8))).toLong + 1L)
+      math.min(cores, (bytes / BigInt(TargetBytes / 8)).toLong + 1L)
     math.max(2L, math.min(math.max(byBytes, parallelFloor), math.max(2L, rows)))
       .min(Int.MaxValue.toLong).toInt
   }

@@ -164,8 +164,8 @@ object Dedup {
     * bucket in one partition, so a mega-bucket of k near-identical
     * docs emits its k^2/2 pairs from a single task — and AQE's skew
     * split cannot help, because it triggers on input partition BYTES
-    * while this skew lives in the join OUTPUT (ScaleSmoke measures the
-    * effect). The classic remedy is triangle distribution: give every
+    * while this skew lives in the join OUTPUT (`ScaleLawSpec`'s
+    * all-near-dup replicas grow candidate pairs N²-fold). The classic remedy is triangle distribution: give every
     * row a deterministic group g = hash(id) mod G, replicate each row
     * to the G unordered block pairs {g, b}, join on
     * (bucket, blockLo, blockHi), and keep a pair only in the ONE block
@@ -777,8 +777,7 @@ object Dedup {
     * [[lshCandidatePairs]] for typical corpora, or
     * `lshCandidatePairsSkewSafe(_, _, _, _, _, nGroups)` when
     * mega-buckets are expected (both emit the identical candidate set,
-    * so the verified result is the same either way — see the ScaleSmoke
-    * A/B crossover).
+    * so the verified result is the same either way).
     */
   def nearDuplicates(
       docs: DataFrame,
@@ -858,7 +857,8 @@ object Dedup {
     * min-id representative FIRST (one cheap content-hash aggregate),
     * then run LSH + Jaccard verify over representatives only. Web-scale
     * crawls are commonly 30-50% exact duplicates, and LSH candidate
-    * pairs grow with the SQUARE of bucket sizes (see ScaleSmoke) — so
+    * pairs grow with the SQUARE of bucket sizes (see `ScaleLawSpec`'s
+    * N² candidate ceiling) — so
     * collapsing before banding shrinks the quadratic term at its
     * source: an exact-dup group of k docs contributes k^2 candidate
     * pairs uncollapsed but only its representative collapsed. Output is
@@ -1065,7 +1065,6 @@ object Dedup {
       val mapping = labels
         .select(col("id").as("mid"), col("cluster_id").as("mlabel"))
         .where(col("mid") =!= col("mlabel"))
-      val tc = System.nanoTime()
       val next = reliableCheckpoint(propagated
         .join(mapping, propagated("cluster_id") === mapping("mid"), "left")
         .select(
@@ -1073,18 +1072,13 @@ object Dedup {
           least(propagated("cluster_id"),
             coalesce(col("mlabel"), propagated("cluster_id"))).as("cluster_id"),
           col("old_label")))
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(f"[cc] iter $i: checkpoint ${(System.nanoTime() - tc) / 1e9}%.3f s")
       // any change — via propagation or via the jump — re-enters the
       // frontier, so its neighbors see the improved label next round
       delta = next.where(col("cluster_id") =!= col("old_label")).select("id", "cluster_id")
-      val t0 = System.nanoTime()
       // one cheap scan of the just-checkpointed relation is the
       // convergence probe — a distributed count, never a collect
       val frontierRows = delta.count()
       converged = frontierRows == 0
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(f"[cc] iter $i: frontier $frontierRows, count ${(System.nanoTime() - t0) / 1e9}%.3f s")
       labels = next.select("id", "cluster_id")
       i += 1
     }

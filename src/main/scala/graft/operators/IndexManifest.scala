@@ -608,10 +608,7 @@ private[operators] object IndexManifest {
     * carried references root-independent once and forever.
     */
   def qualify(spark: SparkSession, paths: Seq[String]): Seq[String] =
-    paths.map { s =>
-      val p = new org.apache.hadoop.fs.Path(s)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
-    }
+    paths.map(qualifiedPath(spark, _))
 
   /** The sequenced tombstone mask relation shared by every segmented
     * index family — ONE implementation of the LSM sequencing rule, so

@@ -252,10 +252,8 @@ private[operators] object SegmentedIndex {
   }
 
   /** `rows`' distinct ids, named [[Family.indexIdCol]] and held in
-    * memory while `use` runs — both delete paths hand their tombstone
-    * ids to [[appendTombstone]] this way, so the `ids` table keeps the
-    * cached distinct's partitioning (and file count) whichever path
-    * wrote it, and the guarded delete reads them twice.
+    * memory while `use` runs — the guarded delete reads them twice:
+    * once in its guard, once into [[appendTombstone]].
     */
   private def heldIds[T](f: Family, rows: DataFrame)(use: DataFrame => T): T = {
     val ids = rows.select(col(f.idCol).as(f.indexIdCol)).distinct()
@@ -430,7 +428,8 @@ private[operators] object SegmentedIndex {
         // one aggregate (the emptiness probe and the tombstone mass) and
         // the delete step's id write hit the cache. An inner join, not
         // a semi-join, so the live rows' mass columns ride along; an id
-        // is live at most once, so it keeps one row per replaced id
+        // is live at most once and batch ids are distinct, so it keeps
+        // one row per replaced id and its ids are the tombstone as is
         val replaced = rows.select(col(f.idCol))
           .join(f.liveMass(spark, h).withColumnRenamed(f.indexIdCol, f.idCol), Seq(f.idCol))
           .persist(StorageLevel.MEMORY_AND_DISK)
@@ -438,7 +437,8 @@ private[operators] object SegmentedIndex {
           val mass = massAgg(f, replaced)._2
           val base =
             if (mass.head == 0L) h
-            else heldIds(f, replaced)(appendTombstone(spark, f, h, _, mass, s"$outRoot/deleted"))
+            else appendTombstone(spark, f, h, replaced.select(col(f.idCol).as(f.indexIdCol)),
+              mass, s"$outRoot/deleted")
           val updated = appendSegment(spark, f, base, rows, s"$outRoot/updated")
           compactIfDue(spark, f, s"$outRoot/updated", updated, outRoot, maxSegments,
             maxMaskedRatio)

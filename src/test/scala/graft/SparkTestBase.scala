@@ -17,6 +17,16 @@ trait SparkTestBase extends AnyFunSuite {
     * listing is identical". One definition, so every suite asserts
     * untouchedness with the same strength (size AND mtime).
     */
-  protected def fileListing(root: String): Map[String, (Long, Long)] =
-    SmokeFiles.fileListing(root)
+  protected def fileListing(root: String): Map[String, (Long, Long)] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => base.relativize(p).toString ->
+          (java.nio.file.Files.size(p), java.nio.file.Files.getLastModifiedTime(p).toMillis))
+        .toMap
+    } finally walk.close()
+  }
 }

@@ -203,10 +203,10 @@ class IndexJobCountSpec extends SparkTestBase {
   }
 
   // the counts measured with this layout, AQE on, local[4]
-  private val Bm25At1 = 17
-  private val Bm25At3 = 19
-  private val SideAt1 = 11
-  private val SideAt3 = 13
-  private val PqAt1 = 11
-  private val PqAt3 = 13
+  private val Bm25At1 = 15
+  private val Bm25At3 = 17
+  private val SideAt1 = 9
+  private val SideAt3 = 11
+  private val PqAt1 = 9
+  private val PqAt3 = 11
 }
