@@ -165,8 +165,9 @@ object Dedup {
     * docs emits its k^2/2 pairs from a single task — and AQE's skew
     * split cannot help, because it triggers on input partition BYTES
     * while this skew lives in the join OUTPUT (`ScaleLawSpec`'s
-    * all-near-dup replicas grow candidate pairs N²-fold). The classic remedy is triangle distribution: give every
-    * row a deterministic group g = hash(id) mod G, replicate each row
+    * all-near-dup replicas grow candidate pairs N²-fold). The classic
+    * remedy is triangle distribution: give every row a deterministic
+    * group g = hash(id) mod G, replicate each row
     * to the G unordered block pairs {g, b}, join on
     * (bucket, blockLo, blockHi), and keep a pair only in the ONE block
     * that equals its own group pair — so each pair is emitted exactly

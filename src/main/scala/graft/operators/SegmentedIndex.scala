@@ -429,7 +429,9 @@ private[operators] object SegmentedIndex {
         // the delete step's id write hit the cache. An inner join, not
         // a semi-join, so the live rows' mass columns ride along; an id
         // is live at most once and batch ids are distinct, so it keeps
-        // one row per replaced id and its ids are the tombstone as is
+        // one row per replaced id and its ids are the tombstone as is,
+        // written as one file: they are delta-sized, and the cached
+        // split's partitioning is whatever the batch arrived in
         val replaced = rows.select(col(f.idCol))
           .join(f.liveMass(spark, h).withColumnRenamed(f.indexIdCol, f.idCol), Seq(f.idCol))
           .persist(StorageLevel.MEMORY_AND_DISK)
@@ -437,8 +439,9 @@ private[operators] object SegmentedIndex {
           val mass = massAgg(f, replaced)._2
           val base =
             if (mass.head == 0L) h
-            else appendTombstone(spark, f, h, replaced.select(col(f.idCol).as(f.indexIdCol)),
-              mass, s"$outRoot/deleted")
+            else appendTombstone(spark, f, h,
+              replaced.select(col(f.idCol).as(f.indexIdCol)).coalesce(1), mass,
+              s"$outRoot/deleted")
           val updated = appendSegment(spark, f, base, rows, s"$outRoot/updated")
           compactIfDue(spark, f, s"$outRoot/updated", updated, outRoot, maxSegments,
             maxMaskedRatio)
