@@ -48,6 +48,11 @@ class ScaleLawSpec extends SparkTestBase {
 
   private def symmetricDiff(a: DataFrame, b: DataFrame): Long =
     a.exceptAll(b).count() + b.exceptAll(a).count()
+  /** The final adaptive plan: `df`'s own QueryExecution, run first. */
+  private def finalPlan(df: DataFrame): String = {
+    df.queryExecution.toRdd.count(): Unit
+    df.queryExecution.executedPlan.toString
+  }
   private def ranked(df: DataFrame): Seq[(Int, Long, Double)] =
     df.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
 
@@ -223,10 +228,8 @@ class ScaleLawSpec extends SparkTestBase {
       col("codes").cast("string"), col("c_norm"))
     val live = Similarity.pqIndex(corpus.join(delIds, Seq("vec_id"), "left_anti"),
       "vec_id", "embedding", coarse, cb)
-    val mq = masked.queryExecution
-    mq.toRdd.count(): Unit // settles the adaptive plan of this QueryExecution
     Ann(incomplete, scanned.toDouble / (queries.count() * corpus.count()),
-      bytes(s"$root/del"), symmetricDiff(rows(masked), rows(live)), mq.executedPlan.toString,
+      bytes(s"$root/del"), symmetricDiff(rows(masked), rows(live)), finalPlan(masked),
       cb.length + 8, vecs.head().getSeq[Float](1).length * 4 + 8)
   }
 
@@ -402,16 +405,15 @@ class ScaleLawSpec extends SparkTestBase {
     val delIds = corpus.select("doc_id").orderBy("doc_id").limit(Delta)
     Retrieval.deleteFromIndex(spark, s"$root/upd", delIds, "doc_id", s"$root/del")
     val maskedDf = Retrieval.searchTopKIndexed(spark, s"$root/del", "doc_id", Terms, K)
-    val masked = ranked(maskedDf)
     Lexical(ranked(Retrieval.searchTopK(corpus, "doc_id", "text", Terms, K)),
       ranked(Retrieval.searchTopKIndexed(spark, s"$root/index", "doc_id", Terms, K)),
       postings.where(col("term").isin(Terms: _*)).count(),
       spark.read.parquet(s"$seg/termdf").where(col("term").isin(Terms: _*))
         .agg(coalesce(sum("df"), lit(0L))).head().getLong(0),
-      postings.count(), bytes(s"$root/del"), masked,
+      postings.count(), bytes(s"$root/del"), ranked(maskedDf),
       ranked(Retrieval.searchTopK(corpus.join(delIds, Seq("doc_id"), "left_anti"), "doc_id",
         "text", Terms, K)),
-      maskedDf.queryExecution.executedPlan.toString)
+      finalPlan(maskedDf))
   }
 
   test("BM25: the indexed serve ranks exactly like the direct scan, ranks 1..k") {
@@ -554,7 +556,7 @@ class ScaleLawSpec extends SparkTestBase {
       val want = corpus.join(churn.select("doc_id"), Seq("doc_id"), "left_anti").unionByName(readds)
       val side = Side(roundBytes, baseKept, symmetricDiff(live, want),
         SideIndex.info(spark, served, "chars").head().getAs[Long]("n_rows_live"), want.count(),
-        live.queryExecution.executedPlan.toString, (0, 0, 0L))
+        finalPlan(live), (0, 0, 0L))
       val c = SideIndex.info(spark, SideIndex.maintain(spark, served, None, None, "doc_id",
         "chars", s"$root/compact", maxSegments = 1), "chars").head()
       side.copy(compacted = (c.getInt(0), c.getInt(1), c.getAs[Long]("n_rows_live")))
