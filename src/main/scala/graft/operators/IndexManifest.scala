@@ -97,7 +97,11 @@ private[operators] object IndexManifest {
   def segTableOrd(spark: SparkSession, h: Handle, table: String): org.apache.spark.sql.DataFrame =
     cachedRel(h, s"ord/$table")(segTableOrd(spark, h.segments, table))
 
-  /** [[Handle]]-memoized [[tombstoneRel]]. */
+  /** [[Handle]]-memoized [[tombstoneRel]]: a generation's mask is
+    * read once, on the driver when it fits under the broadcast
+    * threshold, and every serve, guard and compaction of that
+    * generation joins the same relation.
+    */
   def tombstoneRel(
       spark: SparkSession, h: Handle, idCol: String): Option[org.apache.spark.sql.DataFrame] =
     if (h.tombstones.isEmpty) None
@@ -305,17 +309,53 @@ private[operators] object IndexManifest {
     if (fs.exists(p)) walk(p) else Seq.empty
   }
 
+  /** One data file's footer, read on the driver through the session's
+    * Hadoop conf. parquet-hadoop's `open(InputFile)` builds its read
+    * options on a fresh `Configuration`, which parses Hadoop's XML
+    * defaults again on every call: 3.3 ms a read warm, against
+    * 0.004 ms with the session's conf (4-vCPU box).
+    */
   private def footer(spark: SparkSession,
       file: org.apache.hadoop.fs.Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        file, spark.sparkContext.hadoopConfiguration))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, file).build())
     try r.getFooter finally r.close()
   }
 
+  /** `use` over the records of one parquet data file, read on the
+    * driver as parquet-hadoop example `Group`s through the session's
+    * Hadoop conf: the reader builder over a `HadoopInputFile` takes its
+    * conf, where the `Path` builder starts from a fresh one.
+    */
+  private def groups[T](spark: SparkSession, file: org.apache.hadoop.fs.Path)(
+      use: Iterator[org.apache.parquet.example.data.Group] => T): T = {
+    import org.apache.parquet.example.data.Group
+    val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          file, spark.sparkContext.hadoopConfiguration)) {
+      override protected def getReadSupport() =
+        new org.apache.parquet.hadoop.example.GroupReadSupport
+    }.build()
+    try use(Iterator.continually(reader.read()).takeWhile(_ != null)) finally reader.close()
+  }
+
+  /** Field `i` of `g` as a Long when it is a present INT64 or INT32. */
+  private def intCell(g: org.apache.parquet.example.data.Group, i: Int): Option[Long] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    val t = g.getType.getType(i)
+    if (!t.isPrimitive || g.getFieldRepetitionCount(i) == 0) None
+    else t.asPrimitiveType.getPrimitiveTypeName match {
+      case INT64 => Some(g.getLong(i, 0))
+      case INT32 => Some(g.getInteger(i, 0).toLong)
+      case _ => None
+    }
+  }
+
   /** The rows of the parquet table at `dir`, summed from its data
-    * files' footers on the driver — what `count()` of the table
-    * returns, without a job.
+    * files' footers on the driver ([[footer]], the session's Hadoop
+    * conf) — what `count()` of the table returns, without a job.
     */
   def footerRowCount(spark: SparkSession, dir: String): Long = {
     import scala.jdk.CollectionConverters._
@@ -337,38 +377,23 @@ private[operators] object IndexManifest {
 
   /** The integer-valued cells of a small flat parquet table, one map
     * per row (a null cell is absent from its map), read with
-    * parquet-hadoop on the driver: no schema-inference job and no scan
-    * job for what is one row. A directory that is missing or holds no
-    * data file goes through the Spark read instead, so it fails (or
-    * reads empty) exactly as a query over it would.
+    * parquet-hadoop on the driver ([[groups]], the session's Hadoop
+    * conf): no schema-inference job and no scan job for what is one
+    * row. A directory that is missing or holds no data file goes
+    * through the Spark read instead, so it fails (or reads empty)
+    * exactly as a query over it would.
     */
   private def smallTableRows(spark: SparkSession, dir: String): Seq[Map[String, Long]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
-    val conf = spark.sparkContext.hadoopConfiguration
     val files = dataFiles(spark, dir)
     if (files.isEmpty)
       readDir(spark, dir).collect().toSeq.map(r => r.schema.fieldNames.zip(r.toSeq).collect {
         case (n, v: java.lang.Long) => n -> v.longValue
         case (n, v: java.lang.Integer) => n -> v.longValue
       }.toMap)
-    else files.flatMap { f =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport, f)
-        .withConf(conf).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-        val t = g.getType
-        (0 until t.getFieldCount)
-          .filter(i => t.getType(i).isPrimitive && g.getFieldRepetitionCount(i) > 0)
-          .flatMap { i =>
-            t.getType(i).asPrimitiveType.getPrimitiveTypeName match {
-              case INT64 => Some(t.getFieldName(i) -> g.getLong(i, 0))
-              case INT32 => Some(t.getFieldName(i) -> g.getInteger(i, 0).toLong)
-              case _ => None
-            }
-          }.toMap
-      }.toList
-      finally reader.close()
-    }
+    else files.flatMap(f => groups(spark, f)(_.map { g =>
+      val t = g.getType
+      (0 until t.getFieldCount).flatMap(i => intCell(g, i).map(t.getFieldName(i) -> _)).toMap
+    }.toList))
   }
 
   /** A one-row LOCAL DataFrame of non-null Int / Long / String values
@@ -622,13 +647,75 @@ private[operators] object IndexManifest {
     * both generations — which is why MAX is the right merge.
     * Delta-sized: rows = deleted ids. None when the index has no
     * tombstones, so no-deletes plans carry zero extra operators.
+    *
+    * Where it comes from: the driver reads the `ids` tables
+    * ([[groups]]), keeps each id's max `up_to` and returns a LOCAL
+    * relation — a side input, which Spark broadcasts into every mask
+    * join without a shuffle. The distributed `groupBy/max`
+    * ([[distributedMask]], same schema and rows) stays for what the
+    * driver should not take, each decided from footers with no job:
+    *  - the ids tables' footer row count times the mask's row size
+    *    (Spark's estimate: 8 bytes plus the columns' default sizes, 20
+    *    for a BIGINT id) is above `spark.sql.autoBroadcastJoinThreshold`,
+    *    the size at which Spark stops broadcasting (so -1 always falls back);
+    *  - the id column is not BIGINT or INT;
+    *  - a listed `ids` directory has no data file, so a torn tombstone
+    *    fails exactly as the distributed read does.
+    * The [[Handle]] memo holds one mask per (generation, id column):
+    * at most the threshold in Spark-estimated bytes each (3.3 M BIGINT
+    * ids at the 64 MB `Sessions.get` threshold), so at most
+    * [[handleCacheCap]] × the threshold per id column — 16 GB in the
+    * worst case, every cached generation's mask at the limit.
     */
   def tombstoneRel(
       spark: SparkSession, tsPaths: Seq[String], idCol: String): Option[
         org.apache.spark.sql.DataFrame] =
     if (tsPaths.isEmpty) None
-    else Some(readDirs(spark, tsPaths.map(t => s"$t/ids"))
-      .groupBy(col(idCol)).agg(max("up_to").as("__ts_up")))
+    else {
+      val dist = distributedMask(spark, tsPaths, idCol)
+      Some(localMask(spark, tsPaths, dist).getOrElse(dist))
+    }
+
+  /** [[tombstoneRel]]'s rows as a distributed `groupBy/max` over the
+    * `ids` tables — its fallback, and the relation its driver-built
+    * form must equal row for row.
+    */
+  private[operators] def distributedMask(spark: SparkSession, tsPaths: Seq[String],
+      idCol: String): org.apache.spark.sql.DataFrame =
+    readDirs(spark, tsPaths.map(t => s"$t/ids"))
+      .groupBy(col(idCol)).agg(max("up_to").as("__ts_up"))
+
+  /** `dist`'s rows built on the driver as a local relation, or None
+    * when [[tombstoneRel]]'s fallback rule says the driver should not
+    * take them.
+    */
+  private def localMask(spark: SparkSession, tsPaths: Seq[String],
+      dist: org.apache.spark.sql.DataFrame): Option[org.apache.spark.sql.DataFrame] = {
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+    import scala.jdk.CollectionConverters._
+    val Seq(idField, upField) = dist.schema.fields.toSeq
+    val integral = Set[DataType](LongType, IntegerType)
+    val files = tsPaths.map(t => dataFiles(spark, s"$t/ids"))
+    def rows = files.flatten.map(f => footer(spark, f).getBlocks.asScala.map(_.getRowCount).sum).sum
+    val rowBytes = 8L + idField.dataType.defaultSize + upField.dataType.defaultSize
+    if (!integral(idField.dataType) || !integral(upField.dataType) || files.exists(_.isEmpty) ||
+        rows * rowBytes > org.apache.spark.sql.graftbridge.Bridge.sqlConf(spark)
+          .autoBroadcastJoinThreshold) None
+    else {
+      val horizon = scala.collection.mutable.LinkedHashMap.empty[Option[Long], Option[Long]]
+      files.flatten.foreach(f => groups(spark, f)(_.foreach { g =>
+        val t = g.getType
+        val id = intCell(g, t.getFieldIndex(idField.name))
+        horizon(id) = (horizon.getOrElse(id, None) ++ intCell(g, t.getFieldIndex("up_to")))
+          .maxOption
+      }))
+      def box(dt: DataType)(v: Long): Any = if (dt == IntegerType) v.toInt else v
+      Some(spark.createDataFrame(horizon.toSeq.map { case (id, up) =>
+        org.apache.spark.sql.Row(id.map(box(idField.dataType)).orNull,
+          up.map(box(upField.dataType)).orNull)
+      }.asJava, dist.schema))
+    }
+  }
 
   /** The columns a segment generation may LEGITIMATELY lack, per
     * table — the sanctioned format-evolution cases, padded explicitly
@@ -665,9 +752,12 @@ private[operators] object IndexManifest {
 
   /** `rows` (a [[segTableOrd]] relation) minus the tombstone-masked
     * ones: a row dies iff its id is tombstoned AND its segment
-    * predates that tombstone's horizon. No join hint — tombstones are
-    * usually tiny (Spark broadcasts them from stats), but a
-    * mass-deletion batch must be allowed to hash-join.
+    * predates that tombstone's horizon. `ts` is [[tombstoneRel]]'s
+    * mask: a driver-built local relation whenever its estimated size
+    * is within `spark.sql.autoBroadcastJoinThreshold`, which Spark
+    * broadcasts from that same estimate with no shuffle, else the
+    * distributed `groupBy/max`. No join hint — a mass-deletion batch
+    * must be allowed to hash-join.
     */
   def maskLive(
       rows: org.apache.spark.sql.DataFrame,

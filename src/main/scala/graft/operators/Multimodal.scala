@@ -423,7 +423,7 @@ object Multimodal {
       bb.putInt(8 + payload.length).put(name.getBytes("US-ASCII")).put(payload)
       bb.array()
     }
-    val ftyp = box("ftyp", "isom   isom".getBytes("US-ASCII"))
+    val ftyp = box("ftyp", "isom\u0000\u0000\u0002\u0000isom".getBytes("US-ASCII"))
     // tkhd version 0: 84 bytes of fields before width/height
     val tkhd = {
       val bb = java.nio.ByteBuffer.allocate(84 + 8)

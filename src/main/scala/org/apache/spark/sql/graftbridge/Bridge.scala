@@ -23,6 +23,10 @@ object Bridge {
     case _ => None
   }
 
+  /** The classic session's SQL conf, typed values included. */
+  def sqlConf(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
   /** The classic session's SQL conf and a fresh Hadoop conf carrying
     * it — what Spark's own file writes prepare an output writer from.
     */

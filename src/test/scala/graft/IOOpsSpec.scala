@@ -6,14 +6,14 @@ import graft.sources.IOOps
 class IOOpsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmpDir(name: String): String =
+  private def outDir(name: String): String =
     Files.createTempDirectory(s"graft-io-$name").resolve("out").toString
 
   private val df = Seq((1L, "alpha", 1.5), (2L, "beta", -2.25), (3L, "gamma", 0.0))
     .toDF("id", "name", "score")
 
   test("jsonl roundtrip preserves rows and schema") {
-    val p = tmpDir("jsonl")
+    val p = outDir("jsonl")
     IOOps.writeJsonl(df, p)
     val back = IOOps.readJsonl(spark, p, df.schema)
     // json sources surface all fields as nullable; compare name+type
@@ -24,7 +24,7 @@ class IOOpsSpec extends SparkTestBase {
   }
 
   test("csv roundtrip with header and explicit schema") {
-    val p = tmpDir("csv")
+    val p = outDir("csv")
     IOOps.writeCsv(df, p, header = true)
     val back = IOOps.readCsv(spark, p, df.schema, header = true)
     assert(back.as[(Long, String, Double)].collect().sortBy(_._1).toSeq ==
@@ -32,11 +32,11 @@ class IOOpsSpec extends SparkTestBase {
   }
 
   test("parquet roundtrip and checkpoint cut") {
-    val p = tmpDir("parquet")
+    val p = outDir("parquet")
     IOOps.writeParquet(df, p)
     assert(IOOps.readParquet(spark, p).count() == 3)
 
-    val cp = tmpDir("checkpoint")
+    val cp = outDir("checkpoint")
     val restored = IOOps.checkpoint(df, cp)
     assert(restored.count() == 3)
   }
@@ -51,7 +51,7 @@ class IOOpsSpec extends SparkTestBase {
 
   test("avro roundtrip via avro-mapred container files") {
     import graft.sources.AvroIO
-    val p = tmpDir("avro")
+    val p = outDir("avro")
     AvroIO.write(df, p)
     val back = AvroIO.read(spark, p + "/part-*", df.schema)
     assert(back.as[(Long, String, Double)].collect().sortBy(_._1).toSeq ==
@@ -61,7 +61,7 @@ class IOOpsSpec extends SparkTestBase {
   test("xml roundtrip with typed schema and escaping") {
     import graft.sources.XmlIO
     val xdf = Seq((1L, "a<b&c", 1.5), (2L, "plain", -2.0)).toDF("id", "name", "score")
-    val p = tmpDir("xml")
+    val p = outDir("xml")
     XmlIO.write(xdf, p)
     val back = XmlIO.read(spark, p, xdf.schema)
     assert(back.as[(Long, String, Double)].collect().sortBy(_._1).toSeq ==
@@ -77,7 +77,7 @@ class IOOpsSpec extends SparkTestBase {
       (2L, Option.empty[String]),
       (3L, Option(""))
     ).toDF("id", "name")
-    val p = tmpDir("xml-edge")
+    val p = outDir("xml-edge")
     XmlIO.write(xdf, p)
     val back = XmlIO.read(spark, p, xdf.schema)
       .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
@@ -101,7 +101,7 @@ class IOOpsSpec extends SparkTestBase {
   }
 
   test("compressed write/read by extension (gzip codec)") {
-    val p = tmpDir("gz")
+    val p = outDir("gz")
     df.write.option("compression", "gzip").json(p)
     val back = IOOps.readJsonl(spark, p, df.schema)
     assert(back.count() == 3)

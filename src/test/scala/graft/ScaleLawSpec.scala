@@ -22,8 +22,6 @@ class ScaleLawSpec extends SparkTestBase {
   private val Scales = Seq(1, N)
   private val Delta = 37 // the fixed delete size of the O(delta) laws
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
   private def bytes(dir: String): Long = fileListing(dir).values.map(_._1).sum
   private def exists(dir: String): Boolean = new java.io.File(dir).exists
   private def table(name: String): DataFrame = spark.read.parquet(s"$Sf/$name.parquet")
@@ -38,7 +36,7 @@ class ScaleLawSpec extends SparkTestBase {
     */
   private def replicate(base: DataFrame, n: Int, stride: Long, idCols: String*)(
       vary: (Int, DataFrame) => DataFrame = (_, d) => d): DataFrame = {
-    val path = tmp("replicas")
+    val path = tmpDir("replicas")
     (0 until n).map { r =>
       if (r == 0) base
       else vary(r, idCols.foldLeft(base)((d, c) => d.withColumn(c, col(c) + lit(r * stride))))
@@ -202,7 +200,7 @@ class ScaleLawSpec extends SparkTestBase {
     val coarse = Similarity.trainCentroids(corpus, "vec_id", "embedding", Cells)
     val cb = Similarity.trainProductCodebooks(corpus, "vec_id", "embedding",
       numSub = 16, nCentroids = 64)
-    val root = tmp("ann")
+    val root = tmpDir("ann")
     Similarity.pqIndex(corpus, "vec_id", "embedding", coarse, cb).write.parquet(s"$root/index")
     val incomplete = Similarity.ivfPqTopKIndexed(queries, spark.read.parquet(s"$root/index"),
         "vec_id", "embedding", K, coarse, Probe, cb)
@@ -255,7 +253,7 @@ class ScaleLawSpec extends SparkTestBase {
   private case class Graph(nodes: Long, ranks: Map[Long, Double], ppr: Map[Long, Double])
 
   private lazy val pairs0 = {
-    val p = tmp("graph")
+    val p = tmpDir("graph")
     Dedup.lshCandidatePairs(table("documents"), "doc_id", "text", numHashes = 8,
       rowsPerBand = 2).select("a_id", "b_id").write.mode("overwrite").parquet(p)
     spark.read.parquet(p)
@@ -328,7 +326,7 @@ class ScaleLawSpec extends SparkTestBase {
             concat(col("text"), lit(" new")).as("text")))
         (corpus, b, corpus.where(!col("doc_id").isin(ids.take(20): _*)).unionByName(b))
       } else (corpus.where(!col("doc_id").isin(ids: _*)), rowsOf(ids.take(40)), corpus)
-    val root = tmp("bm25-round")
+    val root = tmpDir("bm25-round")
     val (ptr, gen) = (s"$root/CURRENT", s"$root/gen")
     Retrieval.buildIndex(base, "doc_id", "text", s"$root/base")
     ServePointer.publish(spark, ptr, s"$root/base", "BM25")
@@ -395,7 +393,7 @@ class ScaleLawSpec extends SparkTestBase {
 
   private lazy val lexical = atScales { n =>
     val corpus = docCopies(n)
-    val root = tmp("lexical")
+    val root = tmpDir("lexical")
     Retrieval.buildIndex(corpus, "doc_id", "text", s"$root/index")
     val seg = s"$root/index/segments/seg-00000"
     val postings = spark.read.parquet(s"$seg/postings")
@@ -492,7 +490,7 @@ class ScaleLawSpec extends SparkTestBase {
       "lang", weights, 256, 4)
     val reg = replicate(reg0, n, docStride, "doc_id")()
     val churned = reg.where(col("lang") =!= churnLang || col("doc_id") % 9 =!= 0)
-    val root = s"${tmp("release")}/tree"
+    val root = s"${tmpDir("release")}/tree"
     Curation.publishRelease(manifest(reg), "lang", root)
     val before = fileListing(root)
     val report = Curation.maintainRelease(spark, root, churned, "doc_id", "n_tokens", "lang",
@@ -542,7 +540,7 @@ class ScaleLawSpec extends SparkTestBase {
     val corpus = replicate(rows0, n, docStride, "doc_id") { (r, d) =>
       d.withColumn("n_chars", col("n_chars") + r)
     }
-    val root = tmp("side")
+    val root = tmpDir("side")
     SideIndex.build(corpus, "doc_id", "chars", s"$root/base")
     val before = fileListing(s"$root/base")
     val churn = corpus.orderBy("doc_id").limit(Delta).persist(StorageLevel.MEMORY_AND_DISK)

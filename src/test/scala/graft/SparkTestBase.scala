@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM. */
@@ -8,8 +9,26 @@ object SparkTestBase {
   lazy val spark: SparkSession = Sessions.get(cores = 4)
 }
 
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temp directory that this suite deletes, with everything
+    * under it, once its tests have run.
+    */
+  protected def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      tmpDirs.asScala.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+      tmpDirs.clear()
+    } finally super.afterAll()
 
   /** Every regular file under `root`: relative path -> (size, mtime).
     * The O(increment)/O(delta) maintenance assertions compare these

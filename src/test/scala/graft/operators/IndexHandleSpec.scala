@@ -11,12 +11,9 @@ import graft.SparkTestBase
   */
 class IndexHandleSpec extends SparkTestBase {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("handle loads version/flavor/segments/tombstones with paths resolved at the root") {
-    val dir = tmp("handle-load")
-    val other = tmp("handle-load-absroot")
+    val dir = tmpDir("handle-load")
+    val other = tmpDir("handle-load-absroot")
     IndexManifest.write(spark, dir, version = 3, flavor = "direct",
       segments = Seq("segments/seg-00000", s"$other/seg"),
       tombstones = Seq("tombstones/ts-00000"))
@@ -31,7 +28,7 @@ class IndexHandleSpec extends SparkTestBase {
   }
 
   test("a republished manifest at the same path is picked up — stale handles are never served") {
-    val dir = tmp("handle-stale")
+    val dir = tmpDir("handle-stale")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/segments/a"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/segments/b"))
     IndexManifest.write(spark, dir, version = 3, segments = Seq("segments/a"))
@@ -56,7 +53,7 @@ class IndexHandleSpec extends SparkTestBase {
   }
 
   test("missing manifest refuses loudly with the index name") {
-    val dir = tmp("handle-missing")
+    val dir = tmpDir("handle-missing")
     val e = intercept[IllegalArgumentException] {
       IndexManifest.handle(spark, dir, what = "BM25")
     }
@@ -73,7 +70,7 @@ class IndexHandleSpec extends SparkTestBase {
       // entries just reload on their next touch)
       IndexManifest.handleCacheClear()
       val dirs = (1 to 3).map { i =>
-        val d = tmp(s"handle-lru-$i")
+        val d = tmpDir(s"handle-lru-$i")
         IndexManifest.write(spark, d, version = 3, segments = Seq("segments/a"))
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$d/segments/a"))
         d
@@ -88,8 +85,8 @@ class IndexHandleSpec extends SparkTestBase {
   }
 
   test("a base root deleted AFTER the handle is cached trips the periodic re-validation") {
-    val dir = tmp("handle-revalidate")
-    val base = tmp("handle-revalidate-base")
+    val dir = tmpDir("handle-revalidate")
+    val base = tmpDir("handle-revalidate-base")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/segments/a"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/seg"))
     IndexManifest.write(spark, dir, version = 3,
@@ -112,7 +109,7 @@ class IndexHandleSpec extends SparkTestBase {
   }
 
   test("a vanished base root carried by reference fails at the manifest level, not mid-scan") {
-    val dir = tmp("handle-gone")
+    val dir = tmpDir("handle-gone")
     IndexManifest.write(spark, dir, version = 3,
       segments = Seq(s"$dir/segments/seg-00000", "/tmp/graft-retired-base/segments/seg-00000"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/segments/seg-00000"))
@@ -125,8 +122,8 @@ class IndexHandleSpec extends SparkTestBase {
   }
 
   test("a handle cached on write equals the one reloaded from disk") {
-    val dir = tmp("handle-onwrite")
-    val base = tmp("handle-onwrite-base")
+    val dir = tmpDir("handle-onwrite")
+    val base = tmpDir("handle-onwrite-base")
     Seq(s"$dir/segments/seg-00000", s"$dir/tombstones/ts-00000", s"$base/seg").foreach(d =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     IndexManifest.write(spark, dir, version = 3, flavor = "pq-direct",
@@ -142,7 +139,7 @@ class IndexHandleSpec extends SparkTestBase {
   }
 
   test("a manifest whose roots do not exist yet is not cached on write") {
-    val dir = tmp("handle-onwrite-missing")
+    val dir = tmpDir("handle-onwrite-missing")
     IndexManifest.write(spark, dir, version = 3, segments = Seq("segments/seg-00000"))
     // the roots appear after the write: the first handle() must load
     // (and validate) from disk, not serve anything cached by write
@@ -153,7 +150,7 @@ class IndexHandleSpec extends SparkTestBase {
   }
 
   test("a memoized directory read is not served after the directory is rewritten in place") {
-    val dir = s"${tmp("dirmemo")}/stats"
+    val dir = s"${tmpDir("dirmemo")}/stats"
     spark.range(3).selectExpr("id as a").write.parquet(dir)
     assert(IndexManifest.readDir(spark, dir).columns.toSeq == Seq("a"))
     assert(graft.JobCounter.jobs(spark)(IndexManifest.readDir(spark, dir).columns) == 0,
@@ -183,7 +180,7 @@ class IndexHandleSpec extends SparkTestBase {
 
   test("a driver-written one-row table is the table a Spark write of the same row leaves") {
     import org.apache.spark.sql.functions.{lit, typedLit}
-    val root = tmp("one-row-format")
+    val root = tmpDir("one-row-format")
     val segs = Seq("segments/seg-00000", s"$root/abs/seg-00001")
     Seq(s"$root/drv/segments/seg-00000", s"$root/ref/segments/seg-00000", s"$root/abs/seg-00001")
       .foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
@@ -252,7 +249,7 @@ class IndexHandleSpec extends SparkTestBase {
 
   test("a manifest holding only the one-row writer's temp file is crash residue, and a refusal under the serving root") {
     import spark.implicits._
-    val root = tmp("one-row-crash")
+    val root = tmpDir("one-row-crash")
     val ptr = s"$root/CURRENT"
     val docs = (1L to 7L).map(i => (i, s"spark join doc $i")).toDF("doc_id", "text")
     Retrieval.buildIndex(docs.where($"doc_id" <= 4), "doc_id", "text", s"$root/base")

@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions._
   * delete / re-add / delete chain, the published generation serves
   * each id at most once, every replaced id's old version is masked,
   * and the live set equals the model. Checked per family, plus the
-  * refusals the round still runs before any write.
+  * refusals the round still runs before any write. After every step
+  * the generation's tombstone mask, built on the driver, equals the
+  * distributed `groupBy/max` over the same `ids` tables row for row;
+  * a string key and a disabled broadcast threshold take that
+  * distributed mask and serve the same rows.
   */
 class UpsertFactsSpec extends SparkTestBase {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** One family under test: `rows` turns (id, version) pairs into the
     * family's input relation; `served` is the live (id, fingerprint)
@@ -24,6 +25,7 @@ class UpsertFactsSpec extends SparkTestBase {
     */
   private final case class Fam(
       name: String,
+      maskCol: String,
       rows: Seq[(Long, Int)] => DataFrame,
       build: (DataFrame, String) => Unit,
       upsert: (DataFrame, Long, String, String, Double) => Unit,
@@ -35,12 +37,29 @@ class UpsertFactsSpec extends SparkTestBase {
   private def fingerprints(df: DataFrame): Seq[(Long, String)] =
     df.collect().toSeq.map(r => (r.getLong(0), r.getString(1)))
 
+  /** The mask every read of the generation at `path` joins: built on
+    * the driver as a local relation when `local`, else the distributed
+    * fallback, and in both cases the distributed `groupBy/max`'s rows.
+    */
+  private def checkMask(path: String, idCol: String, local: Boolean, step: String): Unit = {
+    val h = IndexManifest.handle(spark, path)
+    IndexManifest.tombstoneRel(spark, h, idCol).foreach { mask =>
+      val isLocal = mask.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      assert(isLocal == local, s"$step: local mask $isLocal, expected $local")
+      val dist = IndexManifest.distributedMask(spark, h.tombstones, idCol)
+      def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
+      assert(mask.schema == dist.schema, s"$step: mask schema")
+      assert(rows(mask) == rows(dist), s"$step: mask rows")
+    }
+  }
+
   // id 7: replaced in round 0, deleted, re-added in round 1, replaced
   // again in round 2; id 3 replaced twice; 12 once; 101-103 arrive new.
   // Round 2 trips the 0.15 masked-ratio policy, so the last check runs
   // on a compacted generation
-  private def chain(f: Fam): Unit = {
-    val root = tmp(s"upsert-facts-${f.name}")
+  private def chain(f: Fam, localMask: Boolean = true): Unit = {
+    val root = tmpDir(s"upsert-facts-${f.name}")
     val ptr = s"$root/CURRENT"
     var model: Map[Long, Int] = (1L to 30L).map(_ -> 0).toMap
     f.build(f.rows(model.toSeq), s"$root/base")
@@ -57,6 +76,7 @@ class UpsertFactsSpec extends SparkTestBase {
         s"${f.name} $step: served ${(got.toSet -- want).toSeq.sortBy(_._1)} beyond the model, " +
           s"missing ${(want -- got.toSet).toSeq.sortBy(_._1)}")
       assert(f.nLive(cur) == model.size.toLong, s"${f.name} $step: info live count")
+      checkMask(cur, f.maskCol, localMask, s"${f.name} $step")
     }
     def round(b: Long, batch: Map[Long, Int]): Unit = {
       f.upsert(f.rows(batch.toSeq), b, ptr, s"$root/gen", 0.15)
@@ -77,7 +97,7 @@ class UpsertFactsSpec extends SparkTestBase {
 
   private val words = Seq("spark", "join", "stream", "index", "segment", "merge", "query")
 
-  private val bm25 = Fam("bm25",
+  private val bm25 = Fam("bm25", "doc_id",
     rows => rows.map { case (i, v) => (i, s"${words((i % 7).toInt)} v$v doc $i") }
       .toDF("doc_id", "text"),
     (df, path) => Retrieval.buildIndex(df, "doc_id", "text", path),
@@ -89,7 +109,7 @@ class UpsertFactsSpec extends SparkTestBase {
     df => df.select(col("doc_id"), Retrieval.contentHash(col("text")).cast("string")),
     path => Retrieval.indexInfo(spark, path).head().getAs[Long]("n_docs_live"))
 
-  private val side = Fam("side",
+  private val side = Fam("side", "doc_id",
     rows => rows.map { case (i, v) => (i, s"v$v-$i") }.toDF("doc_id", "payload"),
     (df, path) => SideIndex.build(df, "doc_id", "t", path),
     (df, b, ptr, gen, ratio) => SideIndex.ingestUpsertBatch(spark, df, b, ptr, gen,
@@ -113,7 +133,7 @@ class UpsertFactsSpec extends SparkTestBase {
       concat_ws("|", col("cell").cast("string"), col("codes").cast("string"),
         col("c_norm").cast("string")))
 
-  private val pq = Fam("pq",
+  private val pq = Fam("pq", "neighbor_id",
     vecRows,
     (df, path) => Similarity.writePqIndex(df, "doc_id", "embedding", coarse, codebooks, path),
     (df, b, ptr, gen, ratio) => Similarity.ingestPqUpsertBatch(spark, df, b, ptr, gen,
@@ -135,8 +155,34 @@ class UpsertFactsSpec extends SparkTestBase {
     chain(pq)
   }
 
+  // the side family keyed by a string ("k<id>"): the driver takes only
+  // BIGINT and INT ids, so every mask is the distributed one
+  private val sideStringKey = {
+    def keyed(df: DataFrame) =
+      df.withColumn("doc_id", concat(lit("k"), col("doc_id").cast("string")))
+    def unkeyed(df: DataFrame) =
+      df.withColumn("doc_id", substring(col("doc_id"), 2, 20).cast("long"))
+    side.copy(name = "side-string-key",
+      rows = rows => keyed(side.rows(rows)),
+      delete = (path, ids, out) => side.delete(path, keyed(ids), out),
+      served = path => unkeyed(side.served(path)),
+      want = df => unkeyed(df))
+  }
+
+  test("a string-keyed side table serves the model through the distributed mask") {
+    chain(sideStringKey, localMask = false)
+  }
+
+  test("with the broadcast threshold disabled, BM25 serves the model through the distributed mask") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try chain(bm25, localMask = false)
+    finally spark.conf.set(key, prev)
+  }
+
   test("BM25 upsert rounds publish stats and tsstats equal to doclen's count and sum, zero-token docs included") {
-    val root = tmp("upsert-bm25-numbers")
+    val root = tmpDir("upsert-bm25-numbers")
     val ptr = s"$root/CURRENT"
     // every fifth (id + version) is a zero-token document (dl = 0);
     // the rest vary in length with the id
@@ -178,6 +224,7 @@ class UpsertFactsSpec extends SparkTestBase {
         assert(row(s"$t/tsstats") ==
           numbers(live.join(ids.select("doc_id"), Seq("doc_id"), "left_semi")), s"$step: $t")
       }
+      checkMask(cur, "doc_id", local = true, step)
       val info = Retrieval.indexInfo(spark, cur).head()
       assert(info.getAs[Long]("n_docs_live") == model.size.toLong, s"$step: n_docs_live")
       assert(info.getAs[Long]("total_len_live") ==
@@ -211,7 +258,7 @@ class UpsertFactsSpec extends SparkTestBase {
   }
 
   test("the upsert round still refuses a drifted side schema and an IVF-PQ flavor mismatch") {
-    val root = tmp("upsert-refusals")
+    val root = tmpDir("upsert-refusals")
     SideIndex.build(side.rows((1L to 10L).map(_ -> 0)), "doc_id", "t", s"$root/side")
     ServePointer.publish(spark, s"$root/SIDE", s"$root/side")
     val drift = intercept[IllegalArgumentException] {
